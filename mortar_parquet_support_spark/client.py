@@ -8,10 +8,16 @@ UUIDs, the UUIDs + a time range become a pruned scan of the lake.
 
 Scale notes (local behavior identical, cluster behavior deliberate):
 
-- The UUID bridge auto-switches between a driver-collected IN-list (prunes
-  ``uuid=`` partition directories / row-group stats — best while the id set
-  is small, reference behavior ``client.py:69-70``) and a broadcast
-  ``LEFT SEMI`` join (no driver round-trip, best for huge id sets).
+- The UUID bridge collects the SPARQL result and harvests ids on the
+  driver, as the reference does before its ``isin`` (``client.py:69``).
+  Distinct ids are at most the graph's terms, which already sit on the
+  driver (the ``SparqlEngine`` contract). A basic-graph-pattern result is
+  one ``LocalRelation`` per site, collected site by site, so the harvest
+  submits no Spark job.
+- Up to ``IN_LIST_MAX`` ids become an IN-list, which prunes ``uuid=``
+  partition directories and row-group stats. Larger id sets reach the
+  scan as a ``LocalRelation`` through a broadcast ``LEFT SEMI`` join,
+  which keeps the plan small.
 - ``limit`` is EXACT (``df.limit``) — documented upgrade over the
   reference's batch-granularity approximate limit (``client.py:101-104``,
   SURVEY.md §7 R4).
@@ -19,19 +25,35 @@ Scale notes (local behavior identical, cluster behavior deliberate):
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mortar_parquet_support_spark.functions import local_frame
 from mortar_parquet_support_spark.plans.sparql import SparqlEngine
 from mortar_parquet_support_spark.sources import sinks
+from mortar_parquet_support_spark.sources.ingest import UUID_RE
 from mortar_parquet_support_spark.sources.lake import TimeseriesLake
 from mortar_parquet_support_spark.sources.ttl import load_graph_dir
 
 #: Above this many ids, skip the IN-list and use a broadcast semi-join.
 IN_LIST_MAX = 10_000
+
+
+def _harvest_ids(rows, columns: list[str], *, has_provenance: bool) -> list[str]:
+    """O3 quirk parity: UUID candidates from EVERY result column, not just
+    the id variable (client.py:69), kept only when UUID-shaped (P9 filters
+    what the reference would pass as garbage into the isin). Lowercased,
+    because ingest stores uuids lowercased and the scan's match is
+    case-sensitive. The ``site`` column is skipped ONLY when it is the
+    provenance column ``sites=[...]`` added: with ``sites=None`` a column
+    named site is the user's own variable (review r14)."""
+    keep = [i for i, c in enumerate(columns) if not (has_provenance and c == "site")]
+    values = {str(r[i]).lower() for r in rows for i in keep if r[i] is not None}
+    return sorted(v for v in values if re.fullmatch(UUID_RE, v))
 
 
 class Client:
@@ -81,15 +103,20 @@ class Client:
         per named graph and results carry a ``site`` provenance column
         (G5-G7, client.py:49-63). All columns are strings (client.py:43,53).
         """
+        return reduce(DataFrame.unionByName, self._sparql_frames(query, sites))  # O4
+
+    def _sparql_frames(self, query: str, sites: Iterable[str] | None) -> list[DataFrame]:
+        """The result as one frame per named graph (or one union frame):
+        each is a ``LocalRelation`` for a basic graph pattern, so collecting
+        them one by one submits no Spark job, where their union would."""
         if self.engine is None:
             raise RuntimeError("no graphs loaded")
         if sites is None:
-            return self.engine.sql(query)
+            return [self.engine.sql(query)]
         sites = list(sites)  # may be a generator; it is iterated twice below
         # compile once per site, THEN probe the first frame for the ?site
         # collision — probing with a separate engine.sql call would pay a
-        # full extra compilation (pattern ordering, join planning, closure
-        # lookups) for sites[0]
+        # full extra compilation for sites[0]
         bare = [self.engine.sql(query, site=site) for site in sites]
         if bare and "site" in bare[0].columns:
             # withColumn('site', provenance) would silently OVERWRITE the
@@ -100,52 +127,15 @@ class Client:
                 "the provenance column added by sites=[...]; rename the "
                 "variable or run with sites=None"
             )
-        frames = [
-            df.withColumn("site", F.lit(site)) for df, site in zip(bare, sites)
-        ]
-        if not frames:
+        if not bare:
             # reference returns an empty pd.DataFrame() for sites=[]
             # (client.py:59-60); mirror with an empty site-only frame
-            from mortar_parquet_support_spark.functions import tiny_frame
-
-            return tiny_frame(self.spark, [], "site string")
-        return reduce(DataFrame.unionByName, frames)  # O4 (client.py:63)
+            return [local_frame(self.spark, ["site"], [])]
+        return [df.withColumn("site", F.lit(site)) for df, site in zip(bare, sites)]
 
     # ------------------------------------------------------------------
     # Composite graph->data queries (client.py:65-109)
     # ------------------------------------------------------------------
-    def _uuid_ids_df(
-        self, sparql_result: DataFrame, *, has_provenance: bool
-    ) -> DataFrame:
-        """O3 quirk parity, kept LAZY: harvest the UUID candidates from EVERY
-        result column, not just the id variable (client.py:69), then keep only
-        UUID-shaped strings (P9 filters what the reference would pass as
-        garbage into the isin). Returns an unexecuted single-column ``uuid``
-        DataFrame so the huge-id-set path never round-trips ids through the
-        driver. The ``site`` column is excluded ONLY when it is the
-        provenance column sites=[...] added — with sites=None a column
-        named site is the user's own query variable and may bind stream
-        UUIDs the reference's every-column harvest would take
-        (review r14)."""
-        cols = [
-            c
-            for c in sparql_result.columns
-            if not (has_provenance and c == "site")
-        ]
-        stacked = sparql_result.select(
-            # LOWERCASE the harvest: ingest stores uuid lowercased
-            # (ingest.py F.lower on the filename stem), and isin/semi-join
-            # are case-sensitive — an uppercase-hex graph id (which the
-            # case-insensitive UUID_RE deliberately accepts) would
-            # otherwise match zero lake rows with no error
-            F.explode(
-                F.array(*[F.lower(F.col(c).cast("string")) for c in cols])
-            ).alias("uuid")
-        )
-        from mortar_parquet_support_spark.functions import is_uuid
-
-        return stacked.filter(is_uuid("uuid")).distinct()
-
     def data_sparql_df(
         self,
         sparql: str,
@@ -154,23 +144,18 @@ class Client:
         end=None,
         limit: int | None = None,
     ) -> DataFrame:
-        """The composite operator as a lazy DataFrame (the native shape; the
+        """The composite operator: ids from the collected SPARQL result,
+        then the lake scan as a lazy DataFrame (the native shape; the
         pandas/CSV/DuckDB methods below are sinks over this)."""
         if self.lake is None:
             raise RuntimeError("no lake opened")
-        res = self.sparql(sparql, sites=sites)
-        ids_df = self._uuid_ids_df(res, has_provenance=sites is not None)
-        # One bounded job picks the branch: materialize at most IN_LIST_MAX+1
-        # ids. Small sets (the common case) are fully in hand already — reuse
-        # them as the pruning IN-list with no second execution. Larger sets
-        # stay distributed: the lazy ids frame goes straight into the
-        # broadcast LEFT SEMI join and the driver never holds the id list.
-        sample = ids_df.limit(IN_LIST_MAX + 1).collect()
-        if len(sample) <= IN_LIST_MAX:
-            out = self.lake.scan(
-                uuids=sorted(row.uuid for row in sample), start=start, end=end
-            )
+        frames = self._sparql_frames(sparql, sites)
+        rows = [row for df in frames for row in df.collect()]
+        ids = _harvest_ids(rows, frames[0].columns, has_provenance=sites is not None)
+        if len(ids) <= IN_LIST_MAX:
+            out = self.lake.scan(uuids=ids, start=start, end=end)
         else:
+            ids_df = local_frame(self.spark, ["uuid"], [(u,) for u in ids])
             out = self.lake.scan_ids(ids_df, start=start, end=end)
         if limit is not None:  # limit=0 means 0 rows, not "no limit"
             out = out.limit(int(limit))

@@ -6,14 +6,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mortar_parquet_support_spark.sources.ingest import UUID_RE
-
-
-def is_uuid(col) -> Column:
-    """P9 (transform.py:11-16): UUID-shaped string predicate."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike(f"^{UUID_RE}$")
-
 
 def materialize(df, *, checkpoint_dir: str | None = None, eager: bool = True):
     """Eager materialization barrier for iterative pipelines (lineage cut +
@@ -31,12 +23,16 @@ def materialize(df, *, checkpoint_dir: str | None = None, eager: bool = True):
       fine for local mode and for clusters that accept recompute-on-loss.
 
     ``eager=False`` cuts the lineage NOW but defers the checkpoint's
-    materialization to the frame's FIRST action — for loops whose next
-    step is itself an action over the new frame (bpe_train's top-pair
-    job), that action materializes the checkpoint as a side effect and
-    the separate eager barrier job disappears (r17). Only for callers
-    whose next action consumes the frame exactly once before any
-    multi-leg self-join: two legs racing to compute an unmaterialized
+    materialization to the frame's FIRST action. On the
+    ``localCheckpoint`` tier, for loops whose next step is itself an
+    action over the new frame (bpe_train's top-pair job), that action
+    materializes the checkpoint as a side effect and the separate eager
+    barrier job disappears (r17). That saving is specific to this tier: a
+    reliable ``checkpoint()`` is written by a separate job after the
+    first action (Spark's ReliableRDDCheckpointData), which runs the
+    lineage a second time — values are unchanged, the work is not. Only
+    for callers whose next action consumes the frame exactly once before
+    any multi-leg self-join: two legs racing to compute an unmaterialized
     lazy checkpoint can transiently duplicate partition work.
     """
     sc = df.sparkSession.sparkContext
@@ -338,3 +334,22 @@ def tiny_frame(spark, rows, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), schema
     )
+
+
+def local_frame(spark, names, rows):
+    """Nullable string columns ``names`` over driver-side ``rows`` (tuples),
+    as one ``LocalRelation`` built from an Arrow table. Unlike
+    :func:`tiny_frame`'s Python RDD, actions over it run on the driver:
+    projections, filters and limits fold into the relation, and
+    ``collect`` submits no Spark job. For driver-sized rows only."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if not names:  # an Arrow table without columns cannot count rows
+        return local_frame(spark, ["__unit"], [("",)] * len(rows)).drop("__unit")
+    columns = list(zip(*rows)) if rows else [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(c, pa.string()) for c in columns], names=list(names)
+    )
+    schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+    return spark.createDataFrame(table, schema)

@@ -1097,7 +1097,13 @@ def embedding_dedup(
     task), and scoring is numpy-vectorized per Arrow batch with the
     bit-identical dimension-loop fold. ``block_rows`` sizes the blocks
     (None = scale-adaptive from the row count and parallelism); it can
-    never change the output, only the task shape."""
+    never change the output, only the task shape. It applies to exact mode
+    only: passing it with ``n_planes > 0`` raises ``ValueError``."""
+    if block_rows is not None and n_planes > 0:
+        raise ValueError(
+            "block_rows sizes exact mode's blocks; it has no effect with "
+            f"n_planes={n_planes} (LSH buckets) — pass n_planes=0 or drop it"
+        )
     if n_planes == 0:
         return _embedding_dedup_exact(
             df,

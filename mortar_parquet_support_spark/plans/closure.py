@@ -2,18 +2,19 @@
 property paths like ``rdfs:subClassOf*`` (SURVEY.md §2.4 G2, §4).
 
 The reference gets this from Oxigraph's path evaluator at query time; here
-the closure of a (static) ontology predicate is **precomputed once** into a
-``(src, dst)`` pairs DataFrame and every query-time path step becomes a
-single equi-join (SURVEY.md §4 'Transitive closure' row).
-
-Two strategies:
+the closure of a (static) ontology predicate is **precomputed once** and
+every query-time path step becomes a single lookup (SURVEY.md §4
+'Transitive closure' row). The SPARQL engine matches on the driver and
+calls :func:`closure_pairs` over edge tuples directly;
+:func:`transitive_closure` serves DataFrame callers with two strategies:
 
 - ``spark``: iterative frontier self-join to fixpoint — the scale path.
   Each round joins the newest paths against the base edges, unions, and
   ``localCheckpoint``s to truncate lineage. O(diameter) shuffles; fine for
   ontology-sized graphs on a cluster.
-- ``driver``: BFS over a collected edge list — for small ontologies
-  (Brick is ~10k subclass edges) this avoids per-iteration job overhead.
+- ``driver``: :func:`closure_pairs` over a collected edge list — for small
+  ontologies (Brick is ~10k subclass edges) this avoids per-iteration job
+  overhead.
 
 ``auto`` picks driver-side under ``DRIVER_EDGE_LIMIT`` edges. Cycles are
 safe in both (visited-set / subtract against known closure, SURVEY §7 R1).
@@ -22,6 +23,7 @@ safe in both (visited-set / subtract against known closure, SURVEY §7 R1).
 from __future__ import annotations
 
 from collections import defaultdict
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,30 +53,6 @@ def transitive_closure(
     the *compiler's* job (it knows which terms are in scope); keeping the
     closure strict makes it reusable for both ``*`` and ``+`` paths.
     """
-    edges = (
-        triples.filter(F.col("predicate") == predicate)
-        .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
-        # dedup happens once inside closure_of_edges
-    )
-    return closure_of_edges(
-        edges,
-        strategy=strategy,
-        max_iterations=max_iterations,
-        checkpoint_dir=checkpoint_dir,
-    )
-
-
-def closure_of_edges(
-    edges: DataFrame,
-    *,
-    strategy: str = "auto",
-    max_iterations: int = 64,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Strict transitive closure of an arbitrary ``(src, dst)`` edge frame —
-    the generalization behind closures of path ALTERNATIONS ``(a|b)*``,
-    whose edge set is the union of several (possibly inverted) predicates'
-    edges."""
     from mortar_parquet_support_spark.functions import materialize
 
     # one dedup, materialized once: auto-mode's count() and the chosen
@@ -82,7 +60,11 @@ def closure_of_edges(
     # upstream filter + distinct shuffle from scratch. An EXPLICIT driver
     # strategy collects exactly once, so the checkpoint write would be
     # pure wasted IO there — skip the barrier.
-    edges = edges.distinct()
+    edges = (
+        triples.filter(F.col("predicate") == predicate)
+        .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
+        .distinct()
+    )
     if strategy != "driver":
         edges = materialize(edges, checkpoint_dir=checkpoint_dir)
     if strategy == "auto":
@@ -92,12 +74,13 @@ def closure_of_edges(
     return _closure_spark(edges, max_iterations, checkpoint_dir)
 
 
-def _closure_driver(edges: DataFrame) -> DataFrame:
+def closure_pairs(edges: Iterable[tuple[str, str]]) -> set[tuple[str, str]]:
+    """Strict transitive closure of driver-side ``(src, dst)`` edge tuples:
+    one visited-set search per source node, so cycles terminate."""
     adj: dict[str, list[str]] = defaultdict(list)
-    rows = edges.collect()
-    for row in rows:
-        adj[row.src].append(row.dst)
-    pairs: list[tuple[str, str]] = []
+    for src, dst in edges:
+        adj[src].append(dst)
+    pairs: set[tuple[str, str]] = set()
     for start in adj:
         seen: set[str] = set()
         stack = list(adj[start])
@@ -107,17 +90,21 @@ def _closure_driver(edges: DataFrame) -> DataFrame:
                 continue
             seen.add(node)
             stack.extend(adj.get(node, ()))
-        pairs.extend((start, node) for node in seen)
-    spark = edges.sparkSession
+        pairs.update((start, node) for node in seen)
+    return pairs
+
+
+def _closure_driver(edges: DataFrame) -> DataFrame:
     from mortar_parquet_support_spark.functions import tiny_frame
 
-    return tiny_frame(spark, pairs, PAIR_SCHEMA)
+    pairs = closure_pairs((row.src, row.dst) for row in edges.collect())
+    return tiny_frame(edges.sparkSession, sorted(pairs), PAIR_SCHEMA)
 
 
 def _closure_spark(
     edges: DataFrame, max_iterations: int, checkpoint_dir: str | None = None
 ) -> DataFrame:
-    """Caller contract (closure_of_edges): ``edges`` arrives already
+    """Caller contract (transitive_closure): ``edges`` arrives already
     deduplicated AND materialized — re-materializing here would write the
     whole edge set to the checkpoint store a second time per closure."""
     from mortar_parquet_support_spark.functions import materialize

@@ -10,8 +10,8 @@ full SPARQL engine expects:
 - basic graph patterns (conjunctive triple patterns, shared variables)
 - ``a`` / ``rdf:type``
 - property paths: sequences ``p1/p2``, closures ``p*``/``p+``/``p?``
-  (``rdf:type/rdfs:subClassOf*``) compiled against a precomputed
-  transitive-closure table (plans/closure.py), inverses ``^p`` (also of
+  (``rdf:type/rdfs:subClassOf*``) matched against a per-scope cached
+  transitive closure (plans/closure.py), inverses ``^p`` (also of
   closures: ``^p*``), alternation ``p1|p2`` of simple steps, and closure
   over an alternation ``(a|b)*`` (transitive closure of the union edge
   set; a modifier on a leg INSIDE an alternation still raises), and
@@ -57,15 +57,19 @@ full SPARQL engine expects:
   over direct aggregate calls (``HAVING (COUNT(?p) > 1)``, compiled via
   hidden aliases)
 
-Compilation: each triple pattern is a filtered scan of the (tiny, cached,
-broadcastable) triples DataFrame with its variable positions renamed to the
-variable names; shared variables become multi-way equi-joins. Patterns are
+Compilation: a group's triple block (its basic graph pattern) matches on
+the driver, against the scope's deduplicated triples indexed by predicate
+(graphs fit on the driver by contract — see ``SparqlEngine``). Patterns are
 greedily ordered most-selective-first (more constants first, literal-object
-patterns like ``hasTimeseriesId`` ahead of wildcards) and each new pattern
-must share a variable with the bound set when possible, so the plan is a
-chain of broadcast hash joins, never an accidental cartesian product — the
-same join-ordering job Oxigraph does internally (SURVEY.md §4 'SPARQL join
-ordering' row).
+patterns like ``hasTimeseriesId`` ahead of wildcards) and each next pattern
+shares a variable with the bound set when possible, so every step is a hash
+join on shared variables, never an accidental cartesian product — the same
+join-ordering job Oxigraph does internally (SURVEY.md §4 'SPARQL join
+ordering' row). Path steps look up the scope's cached closure. The block's
+solutions become one ``LocalRelation`` of string columns, so a BGP-only
+query submits no Spark job; everything above the BGP (OPTIONAL, UNION,
+MINUS, EXISTS, VALUES, BIND, FILTER, subqueries, aggregates and solution
+modifiers) compiles to Spark over that frame.
 
 Values are untyped lexical strings (parity with the reference's stringified
 bindings, client.py:43,53): FILTER comparisons against numeric literals
@@ -86,15 +90,14 @@ legs ``(a*|b)``, blank nodes/paths in CONSTRUCT templates.
 from __future__ import annotations
 
 import re
+from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mortar_parquet_support_spark.plans.closure import (
-    closure_of_edges,
-    transitive_closure,
-)
+from mortar_parquet_support_spark.functions import local_frame
+from mortar_parquet_support_spark.plans.closure import closure_pairs
 from mortar_parquet_support_spark.sources.ttl import RDF_TYPE
 
 
@@ -1257,22 +1260,93 @@ def _apply_regex_flags(pattern: str, args: list, flag_pos: int, fn: str) -> str:
 
 @dataclass(frozen=True)
 class _Scope:
-    """What a group graph pattern compiles against: a triples frame with
-    columns (subject, predicate, object, *extra). ``extra`` names columns
-    that every pattern scan carries through as additional bound variables —
-    the mechanism behind ``GRAPH ?g`` (extra = the graph variable, column =
-    the site)."""
+    """Which triples a group graph pattern matches: one site plus the
+    shared pseudo-sites (``site``), or the union of every site
+    (``site=None``). ``gvar`` names the variable of a ``GRAPH ?g`` clause:
+    every triple then also binds it to its graph's ``urn:{site}#`` IRI,
+    and a shared triple binds every named graph."""
 
-    df: DataFrame
-    extra: tuple = ()
-    #: cache key identifying WHICH triple set this scope sees ("union",
-    #: a site name, ...) — per-scope closures must not leak edges across
-    #: sites (a site-scoped ``p+`` must not traverse another site's edges)
-    key: str = "union"
+    site: str | None = None
+    gvar: str | None = None
 
-    @property
-    def spark(self):
-        return self.df.sparkSession
+
+class _TripleIndex:
+    """One scope's deduplicated ``(graph, subject, predicate, object)``
+    quads, bucketed by predicate. ``graph`` is the graph IRI in a
+    ``GRAPH ?g`` scope — ``None`` for a shared triple, which stands for
+    every IRI in ``graphs`` — and ``None`` in every other scope. Path
+    closures and the term set are computed on first use and kept."""
+
+    def __init__(self, quads, graphs: tuple = ()):
+        self.quads = list(dict.fromkeys(quads))
+        self.graphs = graphs
+        self.by_pred: dict[str, list[tuple]] = defaultdict(list)
+        for q in self.quads:
+            self.by_pred[q[2]].append(q)
+        self._terms: list[str] | None = None
+        self._paths: dict[tuple, tuple] = {}
+
+    def candidates(self, step) -> list[tuple]:
+        """Quads whose predicate can match ``step``."""
+        if isinstance(step, NegatedStep):
+            return [q for q in self.quads if q[2] not in step.predicates]
+        if step.is_var:
+            return self.quads
+        return self.by_pred.get(step.predicate, [])
+
+    def expand(self, quads: list[tuple]):
+        """Shared quads once per named graph (``GRAPH ?g`` scopes)."""
+        for q in quads:
+            if q[0] is None:
+                yield from ((g, *q[1:]) for g in self.graphs)
+            else:
+                yield q
+
+    def terms(self) -> list[str]:
+        """Every subject and object: the zero-length path's domain."""
+        if self._terms is None:
+            self._terms = list(dict.fromkeys(t for q in self.quads for t in (q[1], q[3])))
+        return self._terms
+
+    def path(self, legs: tuple, strict: bool) -> tuple:
+        """``(pairs, forward, backward)`` of a path over the union of the
+        ``(predicate, inverse)`` legs' edges: their strict transitive
+        closure for ``*``/``+``, the single hops for ``?``. ``forward``
+        maps a source to its sorted destinations, ``backward`` the reverse."""
+        key = (legs, strict)
+        if key not in self._paths:
+            edges = {
+                (o, s) if inverse else (s, o)
+                for p, inverse in legs
+                for _, s, _, o in self.by_pred.get(p, ())
+            }
+            pairs = closure_pairs(edges) if strict else edges
+            forward: dict[str, list[str]] = defaultdict(list)
+            backward: dict[str, list[str]] = defaultdict(list)
+            for a, b in sorted(pairs):
+                forward[a].append(b)
+                backward[b].append(a)
+            self._paths[key] = (pairs, forward, backward)
+        return self._paths[key]
+
+
+def _hash_join(lvars: list, lrows: list, rvars: list, rrows) -> tuple[list, list]:
+    """Natural inner join of two solution tables (variable names + rows of
+    equal-length tuples) on their shared variables, hashing the right
+    side; no shared variable makes a cross product. Duplicate-free inputs
+    give a duplicate-free output."""
+    li = [lvars.index(v) for v in rvars if v in lvars]
+    ri = [i for i, v in enumerate(rvars) if v in lvars]
+    extra = [i for i, v in enumerate(rvars) if v not in lvars]
+    table: dict[tuple, list[tuple]] = defaultdict(list)
+    for r in rrows:
+        table[tuple(r[i] for i in ri)].append(tuple(r[i] for i in extra))
+    rows = [
+        row + tail
+        for row in lrows
+        for tail in table.get(tuple(row[i] for i in li), ())
+    ]
+    return lvars + [rvars[i] for i in extra], rows
 
 
 # One definition of "numeric literal" / "numeric comparison" shared by
@@ -1304,11 +1378,14 @@ class SparqlEngine:
     """Compile + run parsed SPARQL over a triples DataFrame.
 
     ``triples`` must have columns (site, subject, predicate, object); extra
-    columns are ignored. The DataFrame is deduplicated (RDF set semantics),
-    cached, and every pattern scan is broadcast-hinted: building-model graphs
-    are ≤ a few MB, so the whole multi-join plan stays shuffle-free. Closure
-    tables for ``*``/``+`` paths are computed once per predicate and reused
-    across queries (SURVEY.md §4).
+    columns are ignored. Contract: the triples fit on the driver. Every
+    caller already meets it, because ``load_graph_dir`` and ``parse_ttl``
+    parse graphs there. The first query collects them once, and each scope
+    (one site plus the shared pseudo-sites, or the union of all sites)
+    keeps a deduplicated, predicate-bucketed index built on first use (RDF
+    set semantics). A group's basic graph pattern matches against that
+    index on the driver, so a BGP-only query submits no Spark job; the
+    scope's path closures are cached with its index (SURVEY.md §4).
     """
 
     def __init__(self, triples: DataFrame, *, shared_sites: list[str] | None = None):
@@ -1316,14 +1393,11 @@ class SparqlEngine:
         '__ontology__') whose triples are visible in EVERY per-site scope —
         the reference's per-graph Brick ontology load (setup-graphs.py:22)
         without 45 duplicate copies."""
-        self.triples = (
-            triples.select("site", "subject", "predicate", "object")
-            .dropDuplicates(["site", "subject", "predicate", "object"])
-            .cache()
-        )
+        self.triples = triples.select("site", "subject", "predicate", "object")
+        self.spark = triples.sparkSession
         self.shared_sites = list(shared_sites or [])
-        self._union = self.triples.select("subject", "predicate", "object").distinct().cache()
-        self._closures: dict[tuple, DataFrame] = {}
+        self._by_site: dict[str, list[tuple]] | None = None
+        self._indexes: dict[tuple, _TripleIndex] = {}
         #: BIND aliases known to carry numeric values (they are
         #: stringified for the uniform schema; ORDER BY casts them back
         #: so the sort is numeric, not lexical — review r14). Reset per
@@ -1338,93 +1412,45 @@ class SparqlEngine:
         the reference's stringified bindings, client.py:43,53)."""
         parsed = parse_sparql(query)
         self._numeric_bind_aliases = set()  # per-query (see __init__)
-        df = (
-            self._union
-            if site is None
-            else self.triples.filter(
-                F.col("site").isin([site, *self.shared_sites])
-            ).select("subject", "predicate", "object")
-        )
-        return self._compile_query(parsed, _Scope(df, key=site or "union"))
+        return self._compile_query(parsed, _Scope(site=site))
 
     def _graph_scope(self, gterm: Term) -> _Scope:
         """Scope for a GRAPH clause. Graph names follow the reference's
         ``urn:{site}#`` convention (setup-graphs.py:18). Shared pseudo-sites
         (the loaded ontology) are visible inside EVERY named graph, exactly
         as the reference parses Brick into each graph (setup-graphs.py:22).
-        """
+        A graph variable carries the ``urn:{site}#`` IRI from the scope on,
+        so an inner FILTER, triple position or VALUES over it compares
+        against the IRI (review r14)."""
         if gterm.kind == "iri":
             m = re.fullmatch(r"urn:(.*)#", gterm.value)
-            site = m.group(1) if m else gterm.value
-            return _Scope(
-                self.triples.filter(
-                    F.col("site").isin([site, *self.shared_sites])
-                ).select("subject", "predicate", "object"),
-                key=site,
-            )
-        gvar = gterm.value
-        # the graph variable carries the reference's ``urn:{site}#`` IRI
-        # FROM THE SCOPE ON, not just in the final projection: an inner
-        # FILTER(?g = <urn:bldg1#>), a triple position using ?g, or a
-        # VALUES over ?g all compile against this column, and binding the
-        # raw site name here made every such comparison silently false
-        # (review r14)
-        giri = F.concat(F.lit("urn:"), F.col("site"), F.lit("#"))
-        real = self.triples.filter(~F.col("site").isin(self.shared_sites))
-        out = real.select(giri.alias(gvar), "subject", "predicate", "object")
-        if self.shared_sites:
-            shared = self.triples.filter(F.col("site").isin(self.shared_sites))
-            sites = real.select("site").distinct()
-            replicated = shared.drop("site").crossJoin(F.broadcast(sites)).select(
-                F.concat(F.lit("urn:"), F.col("site"), F.lit("#")).alias(gvar),
-                "subject", "predicate", "object",
-            )
-            out = out.unionByName(replicated)
-        return _Scope(out, extra=(gvar,))
+            return _Scope(site=m.group(1) if m else gterm.value)
+        return _Scope(gvar=gterm.value)
 
-    def closure(self, predicate: str, scope: _Scope) -> DataFrame:
-        """Transitive closure of ``predicate``'s edges WITHIN the scope's
-        triple set, cached per (scope, predicate). Computing from the
-        engine-global triples would let a site-scoped ``p+``/``p*`` path
-        traverse edges of other sites (a -> b in s1, b -> c in s2 must NOT
-        yield a -> c for a query scoped to s1)."""
-        cache_key = (scope.key, predicate)
-        if cache_key not in self._closures:
-            src = self.triples if scope.key == "union" else scope.df
-            self._closures[cache_key] = transitive_closure(src, predicate).cache()
-        return self._closures[cache_key]
-
-    @staticmethod
-    def _leg_edges_union(steps: tuple, df: DataFrame) -> DataFrame:
-        """Union of the (possibly inverted) single-hop edge sets of an
-        alternation's legs, as (src, dst)."""
-        frames = []
-        for s in steps:
-            s_col, o_col = ("object", "subject") if s.inverse else ("subject", "object")
-            frames.append(
-                df.filter(F.col("predicate") == s.predicate).select(
-                    F.col(s_col).alias("src"), F.col(o_col).alias("dst")
-                )
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out.distinct()
-
-    def closure_alt(self, steps: tuple, scope: _Scope) -> DataFrame:
-        """Cached transitive closure of an alternation's combined edge set
-        — the engine behind ``(a|b)*`` / ``(a|b)+`` paths — computed
-        within the scope's triple set (see :meth:`closure`)."""
-        key = (
-            scope.key,
-            "|".join(("^" if s.inverse else "") + s.predicate for s in steps),
-        )
-        if key not in self._closures:
-            edges = self._union if scope.key == "union" else scope.df
-            self._closures[key] = closure_of_edges(
-                self._leg_edges_union(steps, edges)
-            ).cache()
-        return self._closures[key]
+    def _index(self, scope: _Scope) -> _TripleIndex:
+        """The scope's triple index. The first call collects the triples,
+        grouped by site as ``(None, s, p, o)`` quads that every index
+        shares, so a per-site index adds references to the shared
+        ontology, not copies of it."""
+        key = (scope.site, scope.gvar is not None)
+        if key not in self._indexes:
+            if self._by_site is None:
+                by_site: dict[str, list[tuple]] = defaultdict(list)
+                tbl = self.triples.toArrow()
+                for site, *spo in zip(*(c.to_pylist() for c in tbl.columns)):
+                    by_site[site].append((None, *spo))
+                self._by_site = dict(by_site)
+            by_site, shared = self._by_site, self.shared_sites
+            if scope.gvar is not None:
+                real = sorted(site for site in by_site if site not in shared)
+                quads = [(f"urn:{site}#", *q[1:]) for site in real for q in by_site[site]]
+                quads += [q for site in shared for q in by_site.get(site, ())]
+                index = _TripleIndex(quads, graphs=tuple(f"urn:{s}#" for s in real))
+            else:
+                sites = by_site if scope.site is None else [scope.site, *shared]
+                index = _TripleIndex(q for site in sites for q in by_site.get(site, ()))
+            self._indexes[key] = index
+        return self._indexes[key]
 
     # -- compilation --
     def _compile_query(self, q: Query, scope: _Scope, *, want_nullable: bool = False):
@@ -1564,7 +1590,7 @@ class SparqlEngine:
     def _describe(self, q: Query, scope: _Scope) -> DataFrame:
         """Outgoing triples of every described resource: resources (bound
         variables and/or literal IRIs) unioned, deduplicated, broadcast,
-        and semi-joined against the scope's subjects."""
+        and semi-joined against the scope's triples."""
         vars_ = [s for s in q.select if not s.startswith("<")]
         iris = [s[1:-1] for s in q.select if s.startswith("<")]
         frames = []
@@ -1577,28 +1603,19 @@ class SparqlEngine:
                     raise ValueError(f"DESCRIBE variable ?{v} not bound by WHERE")
                 frames.append(acc.select(F.col(v).alias("__resource")))
         if iris:
-            from mortar_parquet_support_spark.functions import tiny_frame
-
-            frames.append(
-                tiny_frame(
-                    scope.spark, [(i,) for i in iris], "__resource string"
-                )
-            )
+            frames.append(local_frame(self.spark, ["__resource"], [(i,) for i in iris]))
         res = frames[0]
         for f in frames[1:]:
             res = res.unionByName(f)
-        return (
-            scope.df.join(
-                F.broadcast(res.dropDuplicates()),
-                scope.df["subject"] == F.col("__resource"),
-                "left_semi",
-            )
-            .select(
-                F.col("subject").cast("string"),
-                F.col("predicate").cast("string"),
-                F.col("object").cast("string"),
-            )
-            .dropDuplicates()
+        triples = local_frame(
+            self.spark,
+            ["subject", "predicate", "object"],
+            [q[1:] for q in self._index(scope).quads],
+        )
+        return triples.join(
+            F.broadcast(res.dropDuplicates()),
+            triples["subject"] == F.col("__resource"),
+            "left_semi",
         )
 
     def _construct(self, q: Query, acc: DataFrame, bound: set[str]) -> DataFrame:
@@ -1775,8 +1792,9 @@ class SparqlEngine:
                     acc, bound = self._join(acc, bound, df)
             nullable |= dnullable
 
-        for pat in self._order_patterns(group.triples):
-            acc, bound = self._apply_pattern(acc, bound, pat, scope)
+        if group.triples:
+            names, rows = self._match_triples(group.triples, scope)
+            acc, bound = local_frame(self.spark, names, rows), set(names)
         for subq in group.subqueries:
             # a subquery is its own solution sequence: compile in full
             # (aggregates/ORDER/LIMIT included), then join on whatever
@@ -1792,19 +1810,10 @@ class SparqlEngine:
                 # with ?g bound (review finding r8: silently skipping the
                 # clause left ?g unbound and failed the SELECT instead)
                 if gterm.kind == "var":
-                    gdf = (
-                        self.triples.filter(
-                            ~F.col("site").isin(self.shared_sites)
-                        )
-                        .select(
-                            # the graph IRI, matching _graph_scope's
-                            # binding (the var holds urn:{site}# from the
-                            # scope on — review r14)
-                            F.concat(
-                                F.lit("urn:"), F.col("site"), F.lit("#")
-                            ).alias(gterm.value)
-                        )
-                        .distinct()
+                    gdf = local_frame(
+                        self.spark,
+                        [gterm.value],
+                        [(g,) for g in self._index(gscope).graphs],
                     )
                     gvars, gnullable = {gterm.value}, set()
                 else:
@@ -1864,7 +1873,7 @@ class SparqlEngine:
                         how="left_anti",
                     )
         for vars_, rows in group.values:
-            acc, bound = self._apply_values(acc, bound, vars_, rows, scope)
+            acc, bound = self._apply_values(acc, bound, vars_, rows)
             # a var with an UNDEF row may surface as null in the joined
             # result (fresh vars) — later joins must treat it as unbound
             nullable |= {
@@ -1875,7 +1884,7 @@ class SparqlEngine:
         for var, bexpr in group.binds:
             if acc is None:
                 # BIND with no preceding patterns: a one-row unit frame
-                acc = scope.spark.range(1).select()
+                acc = local_frame(self.spark, [], [()])
             if var in bound:
                 raise SparqlUnsupported(f"BIND to already-bound variable ?{var}")
             c = self._compile_filter(bexpr, bound)
@@ -1946,7 +1955,6 @@ class SparqlEngine:
         bound: set[str],
         vars_: list[str],
         rows: list[list[str | None]],
-        scope: _Scope,
     ) -> tuple[DataFrame, set[str]]:
         """Join an inline VALUES table into the group (SPARQL 1.1 §10.2).
 
@@ -1957,13 +1965,7 @@ class SparqlEngine:
         any VALUES row and is FILLED with its value (coalesce), per SPARQL
         §10.2 solution-mapping compatibility. Fresh variables attach their
         column directly, with UNDEF becoming an unbound (null) binding."""
-        from pyspark.sql import types as T
-
-        spark = scope.spark
-        schema = T.StructType([T.StructField(v, T.StringType(), True) for v in vars_])
-        from mortar_parquet_support_spark.functions import tiny_frame
-
-        vdf = tiny_frame(spark, [tuple(r) for r in rows], schema)
+        vdf = local_frame(self.spark, vars_, [tuple(r) for r in rows])
         if acc is None:
             return vdf, set(vars_)
         shared = sorted(bound & set(vars_))
@@ -2237,134 +2239,119 @@ class SparqlEngine:
             out.add(pat.step.predicate)
         return out
 
-    def _apply_pattern(
-        self,
-        acc: DataFrame | None,
-        bound: set[str],
-        pat: Pattern,
-        scope: _Scope,
-    ) -> tuple[DataFrame, set[str]]:
-        if isinstance(pat.step, AltStep) and not pat.step.modifier:
-            return self._apply_alt_pattern(acc, bound, pat, scope)
-        if pat.step.modifier:
-            return self._apply_closure_pattern(acc, bound, pat, scope)
-        if pat.step.is_var:
-            # predicate variable always binds a column; ground s/o become
-            # scan filters, so the generic scan path handles every shape
-            return self._join(acc, bound, self._scan_pattern(pat, scope))
-        if pat.subject.kind != "var" and pat.obj.kind != "var":
-            if scope.extra:
-                # ground pattern inside GRAPH ?g: binds the extra vars to
-                # the graphs containing the triple instead of gating
-                return self._join(acc, bound, self._ground_extra(pat, pat.step, scope))
-            # fully-ground pattern: an existence gate on the whole query
-            return self._gate(acc, scope, self._ground_hit(pat, pat.step, scope)), bound
-        pdf = self._scan_pattern(pat, scope)
-        return self._join(acc, bound, pdf)
+    def _match_triples(self, patterns: list[Pattern], scope: _Scope) -> tuple[list, list]:
+        """A group's triple block against the scope's index: starting from
+        the unit solution (no variables, one row), each pattern in
+        selectivity order hash-joins its bindings in. A fully ground
+        pattern binds nothing, so it keeps or empties the solutions."""
+        index = self._index(scope)
+        names: list[str] = []
+        rows: list[tuple] = [()]
+        for pat in self._order_patterns(patterns):
+            if pat.step.modifier:
+                names, rows = self._match_path(pat, names, rows, scope)
+            else:
+                names, rows = _hash_join(names, rows, *self._scan(pat, scope, index))
+        return names, rows
 
     @staticmethod
-    def _pred_cond(step) -> "F.Column":
-        """Predicate condition for a scan: equality for a simple step,
-        set-exclusion for a negated property set."""
-        if isinstance(step, NegatedStep):
-            return ~F.col("predicate").isin(list(step.predicates))
-        return F.col("predicate") == step.predicate
+    def _scan(pat: Pattern, scope: _Scope, index: _TripleIndex) -> tuple[list, list]:
+        """Distinct bindings of one non-path pattern — of each alternation
+        leg, unioned. Slots follow quad order (graph, subject, predicate,
+        object): ``^p`` swaps the subject and object slots, a constant
+        must equal its slot, and a variable repeated across slots (``?x
+        ?p ?x``, or the ``GRAPH ?g`` variable reused inside) must bind one
+        value."""
+        legs = pat.step.steps if isinstance(pat.step, AltStep) else (pat.step,)
+        g = Term("var", scope.gvar) if scope.gvar else None
 
-    @staticmethod
-    def _ground_filter(pat: Pattern, step: PathStep, scope: _Scope) -> DataFrame:
-        s_col, o_col = ("object", "subject") if step.inverse else ("subject", "object")
-        return scope.df.filter(
-            SparqlEngine._pred_cond(step)
-            & (F.col(s_col) == pat.subject.value)
-            & (F.col(o_col) == pat.obj.value)
+        def pvar(leg):
+            return Term("var", leg.predicate) if leg.is_var else None
+
+        order = (g, pvar(legs[0]), pat.subject, pat.obj)
+        names = list(dict.fromkeys(t.value for t in order if t and t.kind == "var"))
+        out: dict[tuple, None] = {}
+        for leg in legs:
+            s_t, o_t = (pat.obj, pat.subject) if leg.inverse else (pat.subject, pat.obj)
+            slots = (g, s_t, pvar(leg), o_t)
+            consts = [(i, t.value) for i, t in enumerate(slots) if t and t.kind != "var"]
+            first: dict[str, int] = {}
+            same: list[tuple[int, int]] = []
+            for i, t in enumerate(slots):
+                if t and t.kind == "var":
+                    if t.value in first:
+                        same.append((first[t.value], i))
+                    else:
+                        first[t.value] = i
+            take = [first[n] for n in names]
+            quads = index.candidates(leg)
+            for q in index.expand(quads) if scope.gvar else quads:
+                if all(q[i] == v for i, v in consts) and all(q[a] == q[b] for a, b in same):
+                    out[tuple(q[i] for i in take)] = None
+        return names, list(out)
+
+    def _match_path(
+        self, pat: Pattern, names: list, rows: list, scope: _Scope
+    ) -> tuple[list, list]:
+        """``x p* y`` / ``p+`` / ``p?`` — also inverse, also over an
+        alternation ``(a|b)*`` — joined into the solutions.
+
+        Inside ``GRAPH ?g``, path patterns match over the union scope and
+        do not constrain or bind the graph variable (documented
+        simplification; the ontology is shared across graphs anyway).
+
+        - strict pairs come from the scope's cached closure (``*``/``+``)
+          or single hops (``?``);
+        - the zero-length case (``*``, ``?``) is handled structurally:
+          a constant end pins the other end to itself, a bound end copies
+          its value, and only a path between two unbound variables (or
+          one variable at both ends) enumerates the scope's terms.
+        """
+        step = pat.step
+        legs = step.steps if isinstance(step, AltStep) else (step,)
+        index = self._index(_Scope(site=scope.site))
+        pairs, forward, backward = index.path(
+            tuple((leg.predicate, leg.inverse) for leg in legs), step.modifier != "?"
         )
-
-    def _ground_hit(self, pat: Pattern, step: PathStep, scope: _Scope) -> bool:
-        return self._ground_filter(pat, step, scope).limit(1).count() > 0
-
-    def _ground_extra(self, pat: Pattern, step: PathStep, scope: _Scope) -> DataFrame:
-        return (
-            self._ground_filter(pat, step, scope)
-            .select(*[F.col(v) for v in scope.extra])
-            .dropDuplicates()
-        )
-
-    def _apply_alt_pattern(
-        self,
-        acc: DataFrame | None,
-        bound: set[str],
-        pat: Pattern,
-        scope: _Scope,
-    ) -> tuple[DataFrame, set[str]]:
-        """``p1|p2`` — union of the alternatives' scans over the same
-        (subject, object) positions, deduplicated (set semantics)."""
-        steps = pat.step.steps
-        if pat.subject.kind != "var" and pat.obj.kind != "var":
-            if scope.extra:
-                frames = [self._ground_extra(pat, s, scope) for s in steps]
-                pdf = frames[0]
-                for f in frames[1:]:
-                    pdf = pdf.unionByName(f)
-                return self._join(acc, bound, pdf.dropDuplicates())
-            hit = any(self._ground_hit(pat, s, scope) for s in steps)
-            return self._gate(acc, scope, hit), bound
-        frames = [
-            self._scan_pattern(Pattern(pat.subject, s, pat.obj), scope) for s in steps
-        ]
-        pdf = frames[0]
-        for f in frames[1:]:
-            pdf = pdf.unionByName(f)
-        return self._join(acc, bound, pdf.dropDuplicates())
-
-    @staticmethod
-    def _gate(acc: DataFrame | None, scope: _Scope, hit: bool) -> DataFrame:
-        """Resolve a ground pattern: keep `acc` if the triple exists, else
-        empty it. With no acc yet, produce a 1-row (or 0-row) placeholder."""
-        if acc is None:
-            acc = scope.spark.range(1).select(F.lit(1).alias("__one")).drop("__one")
-        return acc if hit else acc.limit(0)
-
-    def _scan_pattern(self, pat: Pattern, scope: _Scope) -> DataFrame:
-        """One triple pattern -> filtered scan with var positions renamed.
-        ``^p`` swaps the subject/object roles of the scan columns; the
-        scope's extra columns (GRAPH variables) ride along as join keys."""
-        s_col, o_col = (
-            ("object", "subject") if pat.step.inverse else ("subject", "object")
-        )
-        extra = set(scope.extra)
-        cols: list = [F.col(v) for v in scope.extra]
-        if pat.step.is_var:
-            df = scope.df
-            pvar = pat.step.predicate
-            if pat.subject.kind == "var" and pvar == pat.subject.value:
-                df = df.filter(F.col("predicate") == F.col(s_col))
-            elif pat.obj.kind == "var" and pvar == pat.obj.value:
-                df = df.filter(F.col("predicate") == F.col(o_col))
-            elif pvar in extra:
-                # GRAPH ?g { ?s ?g ?o }: the var is already a carried
-                # column — constrain, never alias a duplicate column
-                df = df.filter(F.col("predicate") == F.col(pvar))
-            else:
-                cols.append(F.col("predicate").alias(pvar))
-        else:
-            df = scope.df.filter(self._pred_cond(pat.step))
-        if pat.subject.kind == "var":
-            if pat.subject.value in extra:
-                df = df.filter(F.col(s_col) == F.col(pat.subject.value))
-            else:
-                cols.append(F.col(s_col).alias(pat.subject.value))
-        else:
-            df = df.filter(F.col(s_col) == pat.subject.value)
-        if pat.obj.kind == "var":
-            if pat.subject.kind == "var" and pat.obj.value == pat.subject.value:
-                df = df.filter(F.col(s_col) == F.col(o_col))
-            elif pat.obj.value in extra:
-                df = df.filter(F.col(o_col) == F.col(pat.obj.value))
-            else:
-                cols.append(F.col(o_col).alias(pat.obj.value))
-        else:
-            df = df.filter(F.col(o_col) == pat.obj.value)
-        return df.select(*cols).dropDuplicates()
+        zero = step.modifier in ("*", "?")
+        s, o = pat.subject, pat.obj
+        if s.kind != "var" and o.kind != "var":
+            hit = (zero and s.value == o.value) or (s.value, o.value) in pairs
+            return names, rows if hit else []
+        if s.kind != "var" or o.kind != "var":
+            if s.kind != "var":  # the objects a constant subject reaches
+                var, const, ends = o.value, s.value, forward
+            else:  # the subjects that reach a constant object
+                var, const, ends = s.value, o.value, backward
+            reach = dict.fromkeys([*ends.get(const, ()), *([const] if zero else [])])
+            return _hash_join(names, rows, [var], [(v,) for v in reach])
+        sv, ov = s.value, o.value
+        if sv == ov:
+            if not zero:
+                return _hash_join(names, rows, [sv], [(a,) for a, b in pairs if a == b])
+            if sv in names:  # every term reaches itself
+                return names, rows
+            return _hash_join(names, rows, [sv], [(t,) for t in index.terms()])
+        if sv in names and ov in names:
+            # both ends bound: the path filters the solutions
+            i, j = names.index(sv), names.index(ov)
+            return names, [
+                r for r in rows if (zero and r[i] == r[j]) or (r[i], r[j]) in pairs
+            ]
+        if sv in names or ov in names:
+            bound, new, ends = (sv, ov, forward) if sv in names else (ov, sv, backward)
+            i = names.index(bound)
+            out = []
+            for r in rows:
+                reach = ends.get(r[i], ())
+                if zero:
+                    reach = dict.fromkeys([*reach, r[i]])
+                out.extend(r + (e,) for e in reach)
+            return names + [new], out
+        table = dict.fromkeys(sorted(pairs))
+        if zero:
+            table.update(dict.fromkeys((t, t) for t in index.terms()))
+        return _hash_join(names, rows, [sv, ov], list(table))
 
     def _join(
         self, acc: DataFrame | None, bound: set[str], pdf: DataFrame
@@ -2378,146 +2365,3 @@ class SparqlEngine:
         else:
             acc = acc.crossJoin(F.broadcast(pdf))
         return acc, bound | new_vars
-
-    def _apply_closure_pattern(
-        self,
-        acc: DataFrame | None,
-        bound: set[str],
-        pat: Pattern,
-        scope: _Scope,
-    ) -> tuple[DataFrame, set[str]]:
-        """``x p* y`` / ``p+`` / ``p?`` via the closure table.
-
-        Inside ``GRAPH ?g``, path patterns use the engine-global closure and
-        do not constrain or bind the graph variable (documented
-        simplification; the ontology is shared across graphs anyway).
-
-        - strict pairs come from the precomputed closure (``+``; for ``?``
-          the single-hop edge set);
-        - the zero-length case (``*``, ``?``) is handled structurally:
-          if one side is a constant, zero-length pins the other side to that
-          constant; if the subject var is already bound, zero-length simply
-          copies it — no "all terms" enumeration ever materializes unless
-          both sides are unbound variables.
-        """
-        mod = pat.step.modifier
-        if isinstance(pat.step, AltStep):
-            # (a|b)* — closure of the UNION of the legs' edge sets; legs
-            # already carry their own inverse flags
-            pairs = (
-                self.closure_alt(pat.step.steps, scope)
-                if mod in ("*", "+")
-                else self._leg_edges_union(pat.step.steps, scope.df)
-            )
-        else:
-            pairs = (
-                self.closure(pat.step.predicate, scope)
-                if mod in ("*", "+")
-                else scope.df.filter(F.col("predicate") == pat.step.predicate)
-                .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
-                .distinct()
-            )
-            if pat.step.inverse:  # ^p* == (^p)* — closure of reversed edges
-                pairs = pairs.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-        s, o = pat.subject, pat.obj
-        zero = mod in ("*", "?")
-
-        if s.kind != "var" and o.kind != "var":
-            if zero and s.value == o.value:
-                return self._gate(acc, scope, True), bound
-            hit = (
-                pairs.filter((F.col("src") == s.value) & (F.col("dst") == o.value))
-                .limit(1)
-                .count()
-                > 0
-            )
-            return self._gate(acc, scope, hit), bound
-
-        if s.kind == "var" and o.kind != "var":
-            reach = pairs.filter(F.col("dst") == o.value).select(F.col("src").alias(s.value))
-            if zero:
-                from pyspark.sql import types as T
-
-                from mortar_parquet_support_spark.functions import tiny_frame
-
-                one = tiny_frame(
-                    reach.sparkSession, [(o.value,)],
-                    T.StructType([T.StructField(s.value, T.StringType())]),
-                )
-                reach = reach.union(one)
-            return self._join(acc, bound, reach.dropDuplicates())
-
-        if s.kind != "var" and o.kind == "var":
-            reach = pairs.filter(F.col("src") == s.value).select(F.col("dst").alias(o.value))
-            if zero:
-                from pyspark.sql import types as T
-
-                from mortar_parquet_support_spark.functions import tiny_frame
-
-                one = tiny_frame(
-                    reach.sparkSession, [(s.value,)],
-                    T.StructType([T.StructField(o.value, T.StringType())]),
-                )
-                reach = reach.union(one)
-            return self._join(acc, bound, reach.dropDuplicates())
-
-        # both vars
-        svar, ovar = s.value, o.value
-        if svar == ovar:
-            # ?x p+ ?x — cycle membership (two identical column names would
-            # otherwise make the select/join ambiguous and crash)
-            if zero:
-                # zero-length: every term reaches itself -> trivially true
-                # for any existing binding
-                if acc is not None and svar in bound:
-                    return acc, bound
-                terms = (
-                    scope.df.select(F.col("subject").alias(svar))
-                    .union(scope.df.select(F.col("object").alias(svar)))
-                    .distinct()
-                )
-                return self._join(acc, bound, terms)
-            cyc = (
-                pairs.filter(F.col("src") == F.col("dst"))
-                .select(F.col("src").alias(svar))
-                .dropDuplicates()
-            )
-            return self._join(acc, bound, cyc)
-        if acc is not None and svar in bound and ovar in bound:
-            # BOTH endpoints already bound: the closure acts as a FILTER
-            # over existing rows, not a generator — a semi-join on the
-            # (src, dst) pair. The single-key join the svar-only branch
-            # would do duplicates the ovar column and never constrains the
-            # path's destination (review finding r8).
-            step_pairs = pairs.select(
-                F.col("src").alias(svar), F.col("dst").alias(ovar)
-            )
-            out = acc.join(F.broadcast(step_pairs), on=[svar, ovar], how="leftsemi")
-            if zero:
-                out = out.unionByName(acc.filter(F.col(svar) == F.col(ovar)))
-            return out.dropDuplicates(), bound
-        if acc is not None and svar in bound:
-            step_pairs = pairs.select(F.col("src").alias(svar), F.col("dst").alias(ovar))
-            out = acc.join(F.broadcast(step_pairs), on=svar, how="inner")
-            if zero:
-                out = out.unionByName(acc.withColumn(ovar, F.col(svar)))
-            return out.dropDuplicates(), bound | {ovar}
-        if acc is not None and ovar in bound:
-            step_pairs = pairs.select(F.col("src").alias(svar), F.col("dst").alias(ovar))
-            out = acc.join(F.broadcast(step_pairs), on=ovar, how="inner")
-            if zero:
-                out = out.unionByName(acc.withColumn(svar, F.col(ovar)))
-            return out.dropDuplicates(), bound | {svar}
-        # neither bound: enumerate terms for the reflexive part (rare; legal)
-        step_pairs = pairs.select(F.col("src").alias(svar), F.col("dst").alias(ovar))
-        if zero:
-            terms = (
-                scope.df.select(F.col("subject").alias(svar))
-                .union(scope.df.select(F.col("object").alias(svar)))
-                .distinct()
-                .withColumn(ovar, F.col(svar))
-            )
-            step_pairs = step_pairs.unionByName(terms).dropDuplicates()
-        return self._join(acc, bound, step_pairs)

@@ -1,9 +1,11 @@
 """The reference's two embedded queries (/root/reference/mortar-parquet-client/
 client.py:116-140) against the REAL corpus graphs WITH the Brick class
-hierarchy loaded (setup-graphs.py:22 parity via resources/brick_subset.ttl).
+hierarchy loaded (setup-graphs.py:22 parity via resources/brick_subset.ttl),
+and against the in-repo Brick-shaped fixture graphs of the sparql_bridges
+entry, which need no reference checkout.
 
 Oracle: an independent pure-Python triple matcher in this file — no code
-shared with the Spark SPARQL engine — computes the expected binding sets
+shared with the SPARQL engine — computes the expected binding sets
 from the same TTLs; the engine must agree exactly, and bldg1's structural
 counts (82 hasTimeseriesId bridges) pin the corpus shape."""
 
@@ -62,6 +64,7 @@ class _Oracle:
         self.ts_bnode: dict[str, list[str]] = {}
         self.has_id: dict[str, list[str]] = {}
         self.haspoint: dict[str, set[str]] = {}
+        self.terms = {t for row in onto_rows + site_rows for t in (row[1], row[3])}
         for _, s, p, o, _k in site_rows:
             if p == RDF_TYPE:
                 self.types.setdefault(s, set()).add(o)
@@ -111,6 +114,10 @@ class _Oracle:
                         for pi in self.ids(sp_pt):
                             out.add((vav, si, pi))
         return out
+
+    def subclass_star(self) -> set[tuple]:
+        """Every (term, ancestor) pair of ``?c rdfs:subClassOf* ?super``."""
+        return {(t, a) for t in self.terms for a in self.ancestors(t)}
 
 
 def _site_rows(site):
@@ -209,3 +216,49 @@ def test_empty_sites_list_returns_empty_frame(corpus):
     client, _ = corpus
     df = client.sparql("SELECT ?s WHERE { ?s ?p ?o }", sites=[])
     assert df.count() == 0
+
+
+# --------------------------------------------------------------------------
+# The same oracle over in-repo graphs: the sparql_bridges fixture sites
+# (VAVs with sensors/setpoints at every closure depth, decoys, an orphan
+# and an RVAV) with the shipped ontology
+# --------------------------------------------------------------------------
+
+SUBCLASS_STAR = """
+    PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
+    SELECT ?c ?super WHERE { ?c rdfs:subClassOf* ?super . }
+"""
+
+
+@pytest.fixture(scope="module")
+def in_repo(spark):
+    from mortar_parquet_support_spark.entries.reference_surface import _bridge_site_ttl
+
+    site_rows = {
+        s: parse_ttl(_bridge_site_ttl(s, n), s) for s, n in (("siteA", 8), ("siteB", 3))
+    }
+    triples = spark.createDataFrame(
+        site_rows["siteA"] + site_rows["siteB"], schema=TRIPLES_SCHEMA
+    )
+    client = Client(spark, triples=triples, ontology_path=ONTOLOGY)
+    with open(ONTOLOGY, encoding="utf-8") as fh:
+        onto_rows = parse_ttl(fh.read(), "__ontology__")
+    return client, {s: _Oracle(rows, onto_rows) for s, rows in site_rows.items()}
+
+
+@pytest.mark.parametrize(
+    "query, columns, answer",
+    [
+        (QUERY1, ("vav", "sen", "sp"), _Oracle.query1),
+        (ALL_POINTS, ("point", "type", "id"), _Oracle.all_points),
+        (SUBCLASS_STAR, ("c", "super"), _Oracle.subclass_star),
+    ],
+    ids=["query1", "all_points", "subclass_star"],
+)
+def test_in_repo_graphs_match_independent_matcher(in_repo, query, columns, answer):
+    client, oracles = in_repo
+    df = client.sparql(query, sites=["siteA", "siteB"])
+    got = {(r.site, *(r[c] for c in columns)) for r in df.collect()}
+    want = {(s, *t) for s, o in oracles.items() for t in answer(o)}
+    assert got == want
+    assert {s for s, *_ in got} == {"siteA", "siteB"}  # neither site is empty

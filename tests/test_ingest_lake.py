@@ -138,15 +138,16 @@ def test_metadata_summary_multi_fragment_rows(spark, tmp_path):
 
 
 def test_composite_large_id_set_stays_distributed(spark, lake_dir, monkeypatch):
-    """VERDICT r1 #2: above IN_LIST_MAX the bridge must not round-trip ids
-    through the driver — the lazy ids frame feeds a broadcast LEFT SEMI join
-    and the driver materializes at most IN_LIST_MAX+1 probe rows."""
+    """Above IN_LIST_MAX the ids reach the scan through a broadcast LEFT
+    SEMI join instead of an IN-list; either way they come from one collect
+    of the SPARQL result, lowercased, so an uppercase-hex graph id still
+    matches its (lowercased) lake rows."""
     import mortar_parquet_support_spark.client as client_mod
     from mortar_parquet_support_spark.client import Client
     from mortar_parquet_support_spark.sources.ttl import TRIPLES_SCHEMA
     from tests.conftest import plan_str
 
-    uuids = [U1, U2] + [f"{i:08d}-0000-4000-8000-{i:012d}" for i in range(4)]
+    uuids = [U1.upper(), U2] + [f"{i:08d}-0000-4000-8000-{i:012d}" for i in range(4)]
     has_id = "https://brickschema.org/schema/Brick#hasTimeseriesId"
     rows = [
         ("bldg1", f"urn:bldg1#p{i}", has_id, u, "literal")
@@ -164,30 +165,92 @@ def test_composite_large_id_set_stays_distributed(spark, lake_dir, monkeypatch):
         return orig(self)
 
     monkeypatch.setattr(type(triples), "collect", spy)
-    out = c.data_sparql_df(
+    q = (
         "PREFIX brick: <https://brickschema.org/schema/Brick#> "
         "SELECT ?id WHERE { ?p brick:hasTimeseriesId ?id . }"
     )
-    # branch probe is the ONLY driver materialization, and it is bounded
-    assert len(collected) == 1
+    out = c.data_sparql_df(q)
+    # the ids come from ONE collect of the whole SPARQL result
+    assert len(collected) == 1 and collected[0].columns == ["id"]
     probe_plan = collected[0]._jdf.queryExecution().analyzed().toString()
-    assert "GlobalLimit 4" in probe_plan, probe_plan
+    assert "Limit" not in probe_plan, probe_plan
     # the scan itself is a broadcast left-semi join, not an IN-list
     plan = plan_str(out)
     assert "LeftSemi" in plan, plan
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan, plan
     assert out.count() == 5  # only the two real streams have lake rows
-    # small sets still take the pruning IN-list path with one bounded job
+    # small sets take the pruning IN-list path, from the same one collect
     monkeypatch.setattr(client_mod, "IN_LIST_MAX", 100)
     collected.clear()
-    out_small = c.data_sparql_df(
-        "PREFIX brick: <https://brickschema.org/schema/Brick#> "
-        "SELECT ?id WHERE { ?p brick:hasTimeseriesId ?id . }"
-    )
+    out_small = c.data_sparql_df(q)
     assert len(collected) == 1
     small_plan = plan_str(out_small)
     assert "LeftSemi" not in small_plan, small_plan
     assert out_small.count() == 5
+
+
+def _jobs_during(spark, action) -> int:
+    """Spark jobs ``action`` submits, counted through a job group (a count
+    of the status store's job list saturates at its retention limit)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget probe")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sparql_bridge_submits_no_spark_jobs(spark, lake_dir):
+    """Job budget: once the graph index is built, a basic-graph-pattern
+    query and the composite bridge in front of the lake scan run on the
+    driver — no broadcast, dedup or probe job per query."""
+    from mortar_parquet_support_spark.client import Client
+    from mortar_parquet_support_spark.entries.reference_surface import (
+        _ONTOLOGY_PATH,
+        _QUERY1,
+    )
+    from mortar_parquet_support_spark.sources.ttl import TRIPLES_SCHEMA, parse_ttl
+
+    ttl = f"""
+@prefix brick: <https://brickschema.org/schema/Brick#> .
+@prefix b: <urn:bldg1#> .
+b:vav a brick:VAV ; brick:hasPoint b:sen, b:sp .
+b:sen a brick:Zone_Air_Temperature_Sensor ;
+    brick:timeseries [ brick:hasTimeseriesId "{U1}" ] .
+b:sp a brick:Zone_Air_Temperature_Setpoint ;
+    brick:timeseries [ brick:hasTimeseriesId "{U2}" ] .
+"""
+    rows = parse_ttl(ttl, "bldg1") + parse_ttl(ttl.replace("bldg1", "bldg2"), "bldg2")
+    triples = spark.createDataFrame(rows, schema=TRIPLES_SCHEMA)
+    c = Client(spark, triples=triples, lake_root=lake_dir, ontology_path=_ONTOLOGY_PATH)
+    point = """PREFIX brick: <https://brickschema.org/schema/Brick#>
+        PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
+        PREFIX rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#>
+        SELECT ?sen WHERE {
+            <urn:bldg1#vav> brick:hasPoint ?sen_point .
+            ?sen_point rdf:type/rdfs:subClassOf* brick:Temperature_Sensor ;
+                brick:timeseries [ brick:hasTimeseriesId ?sen ] .
+        }"""
+    # warm-up: collects the triples and builds the site indexes
+    assert len(c.sparql(_QUERY1, sites=["bldg1", "bldg2"]).collect()) == 2
+    assert _jobs_during(spark, lambda: spark.range(3).count()) >= 1  # the probe counts
+
+    rows = []
+    assert _jobs_during(
+        spark, lambda: rows.extend(c.sparql(_QUERY1, sites=["bldg1"]).collect())
+    ) == 0
+    assert [(r.sen, r.sp, r.site) for r in rows] == [(U1, U2, "bldg1")]
+    frames = []
+    for sites in (["bldg1"], ["bldg1", "bldg2"]):  # one site, and site by site
+        assert _jobs_during(
+            spark, lambda: frames.append(c.data_sparql_df(point, sites=sites))
+        ) == 0
+    assert [f.count() for f in frames] == [3, 3]  # U1's rows
 
 
 def test_duckdb_sink_reopens_on_new_database_path(spark, lake_dir, tmp_path):

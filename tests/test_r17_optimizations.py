@@ -291,3 +291,11 @@ def test_embedding_dedup_exact_float32_bit_identity(spark):
     ).collect()
     old = _exact_reference(df, "vid", "emb", 0.0).collect()
     assert _norm_rows(new) == _norm_rows(old)
+
+
+def test_embedding_dedup_block_rows_rejected_outside_exact_mode(spark):
+    # block_rows sizes exact mode's blocks only; on the LSH path it would
+    # be silently ignored, so it is refused
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vid long, emb array<double>")
+    with pytest.raises(ValueError, match="block_rows"):
+        embedding_dedup(df, id_col="vid", vec_col="emb", n_planes=4, block_rows=7)

@@ -87,6 +87,15 @@ def test_closure(spark, engine):
 def test_bgp_simple(engine):
     df = engine.sql(PREFIXES + "SELECT ?v WHERE { ?v a brick:VAV . }")
     assert {r.v for r in df.collect()} == {"urn:b#vav1", "urn:b#vav2"}
+    # an empty match keeps the projected columns, typed as strings
+    empty = engine.sql(
+        PREFIXES + "SELECT ?v ?p WHERE { ?v a brick:AHU . ?v brick:hasPoint ?p . }"
+    )
+    assert empty.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema.fields] == [
+        ("v", "string"),
+        ("p", "string"),
+    ]
 
 
 def test_type_subclass_star(engine):
@@ -238,6 +247,8 @@ b:p1 a brick:Zone_Air_Temperature_Sensor ;
 b:sp1 a brick:Zone_Air_Temperature_Setpoint ;
     brick:timeseries [ brick:hasTimeseriesId "bbbbbbbb-2222-2222-2222-222222222222" ] .
 b:vav a brick:VAV ; brick:hasPoint b:p1, b:sp1 .
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+brick:Sensor rdfs:subClassOf brick:Point .
 """
     )
     onto = tmp_path / "Brick.ttl"
@@ -280,6 +291,14 @@ brick:Sensor rdfs:subClassOf brick:Point .
            }"""
     )
     assert {r.id[:8] for r in pts.collect()} == {"aaaaaaaa"}  # setpoint isn't under Point here
+    # a triple in both the site graph and the ontology is one solution
+    dup = """PREFIX brick: <https://brickschema.org/schema/Brick#>
+             PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
+             SELECT ?c WHERE { ?c rdfs:subClassOf brick:Point . }"""
+    assert [r.c for r in c.sparql(dup, sites=["siteA"]).collect()] == [
+        "https://brickschema.org/schema/Brick#Sensor"
+    ]
+    assert c.sparql(dup).count() == 1
 
 
 # --------------------------------------------------------------------------
@@ -1187,6 +1206,18 @@ def test_cycle_path_same_var(spark):
     )
     q = "SELECT ?x WHERE { ?x <urn:p>+ ?x }"
     assert {r.x for r in eng.sql(q).collect()} == {"urn:a", "urn:b"}
+    # a subClassOf cycle terminates, from a bound end and from two free ends
+    sub = RDFS + "subClassOf"
+    cyc = _mini_engine(
+        spark,
+        {"s": [("urn:A", sub, "urn:B", "iri"), ("urn:B", sub, "urn:A", "iri")]},
+    )
+    q = f"SELECT ?d WHERE {{ <urn:A> <{sub}>* ?d }}"
+    assert {r.d for r in cyc.sql(q).collect()} == {"urn:A", "urn:B"}
+    q = f"SELECT ?c ?d WHERE {{ ?c <{sub}>+ ?d }}"
+    assert {(r.c, r.d) for r in cyc.sql(q).collect()} == {
+        (a, b) for a in ("urn:A", "urn:B") for b in ("urn:A", "urn:B")
+    }
 
 
 def test_graph_var_reused_in_pattern(spark):
@@ -1471,27 +1502,21 @@ def test_ttl_single_quoted_strings_and_leading_dot_decimal():
     assert (row[3], row[4]) == (".5", "literal")
 
 
-def test_uuid_harvest_lowercases_for_lake_match(spark):
+def test_uuid_harvest_lowercases_for_lake_match():
     """Review finding r8: ingest stores uuid LOWERCASED, but harvested ids
     kept graph case — an uppercase-hex id (which the case-insensitive
     UUID_RE deliberately accepts) matched zero lake rows with no error."""
-    from mortar_parquet_support_spark.client import Client
+    from mortar_parquet_support_spark.client import _harvest_ids
 
-    c = Client(spark)  # no graphs/lake needed for the harvest helper
-    res = spark.createDataFrame(
-        [("6AF4ADB2-0000-0000-0000-0000000000AB", "not-a-uuid")],
-        ["id", "other"],
-    )
-    got = [r.uuid for r in c._uuid_ids_df(res, has_provenance=False).collect()]
+    rows = [("6AF4ADB2-0000-0000-0000-0000000000AB", "not-a-uuid")]
+    got = _harvest_ids(rows, ["id", "other"], has_provenance=False)
     assert got == ["6af4adb2-0000-0000-0000-0000000000ab"]
 
     # review r14: with sites=None a column NAMED site is the user's own
     # variable and must be harvested; only the provenance column is skipped
-    res2 = spark.createDataFrame(
-        [("6af4adb2-0000-0000-0000-0000000000ab",)], ["site"]
-    )
-    assert c._uuid_ids_df(res2, has_provenance=False).count() == 1
-    assert c._uuid_ids_df(res2, has_provenance=True).count() == 0
+    rows2 = [("6af4adb2-0000-0000-0000-0000000000ab",)]
+    assert len(_harvest_ids(rows2, ["site"], has_provenance=False)) == 1
+    assert _harvest_ids(rows2, ["site"], has_provenance=True) == []
 
 
 def test_sparql_sites_rejects_site_variable_collision(spark, tmp_path):
