@@ -12,8 +12,8 @@ Layout
 - ``session``    SparkSession factory with scale-minded defaults.
 - ``sources``    ingest (CSV -> partitioned time-sorted Parquet lake), lake
                  open/scan with pruning, TTL -> RDF triples, sinks.
-- ``plans``      SPARQL-subset parser + compiler to DataFrame joins, and the
-                 transitive-closure (property path ``*``) builder.
+- ``plans``      SPARQL-subset parser + driver-side pattern matcher, and the
+                 transitive closure behind property paths (``*``, ``+``).
 - ``operators``  timeseries (rollup/asof/sessionize), dedup, similarity
                  search, text analysis, multimodal columns.
 - ``functions``  reusable Column expression helpers.

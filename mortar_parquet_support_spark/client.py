@@ -152,11 +152,7 @@ class Client:
         frames = self._sparql_frames(sparql, sites)
         rows = [row for df in frames for row in df.collect()]
         ids = _harvest_ids(rows, frames[0].columns, has_provenance=sites is not None)
-        if len(ids) <= IN_LIST_MAX:
-            out = self.lake.scan(uuids=ids, start=start, end=end)
-        else:
-            ids_df = local_frame(self.spark, ["uuid"], [(u,) for u in ids])
-            out = self.lake.scan_ids(ids_df, start=start, end=end)
+        out = self._scan_uuids(ids, start, end)
         if limit is not None:  # limit=0 means 0 rows, not "no limit"
             out = out.limit(int(limit))
         return out
@@ -211,6 +207,13 @@ class Client:
             raise RuntimeError("no lake opened")
         # same case normalization as the SPARQL harvest: the lake stores
         # lowercased uuids
-        return self.lake.scan(
-            uuids=[u.lower() for u in uuids], start=start, end=end
-        )
+        return self._scan_uuids(sorted({u.lower() for u in uuids}), start, end)
+
+    def _scan_uuids(self, ids: list[str], start, end) -> DataFrame:
+        """Up to ``IN_LIST_MAX`` ids scan as an IN-list (partition and
+        row-group pruning); more reach the scan as a ``LocalRelation``
+        through a broadcast ``LEFT SEMI`` join, keeping the plan small."""
+        if len(ids) <= IN_LIST_MAX:
+            return self.lake.scan(uuids=ids, start=start, end=end)
+        ids_df = local_frame(self.spark, ["uuid"], [(u,) for u in ids])
+        return self.lake.scan_ids(ids_df, start=start, end=end)

@@ -166,9 +166,8 @@ def ws_tokens(col) -> Column:
     btrim over the full ``\\s`` set removes exactly those boundaries;
     F.trim alone strips only ASCII spaces, the r8 phantom-token bug.
     The spelling matters at corpus scale: higher-order-function lambdas
-    are INTERPRETED per row, outside codegen (the same tax that made the
-    classifier's dense fold lose to its shuffle — operators/text.py),
-    while btrim+split codegen like any other string expression. An
+    are INTERPRETED per row, outside codegen, while btrim+split codegen
+    like any other string expression. An
     all-whitespace or empty input yields [''] (size 1) — callers that
     must exclude content-free docs filter ``btrim != ''`` / ``rlike
     '\\S'`` FIRST, exactly as they did under the HOF spelling, whose []

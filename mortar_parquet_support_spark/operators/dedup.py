@@ -115,24 +115,8 @@ def minhash_signatures(
     shingle_words: int = 3,
     num_perm: int = 64,
     seed: int = 42,
-    in_row: bool = False,
 ) -> DataFrame:
     """(id, sig_0..sig_{n-1}) minhash signature columns.
-
-    ``in_row=True`` computes every signature inside the row
-    (``array_min`` over a transformed hash array) instead of
-    explode + min-agg: byte-identical output (same xxhash64/pmod
-    inputs; equivalence pytest-pinned) with ZERO shuffle — the whole
-    signature stage becomes a pure map, where the default still
-    exchanges ``num_perm`` longs per document. Opt-in, not default,
-    for the measured reason (r11 A/B, same verdict as the classifier's
-    dense serving path): Spark evaluates higher-order functions
-    interpreted, outside whole-stage codegen, and on one 128 GB JVM —
-    where the default's shuffle is a memory-local sort — the in-row
-    path is 2-3x SLOWER (0.58s vs 1.26s at sf0.1; 1.8s vs 5.4s at
-    sf10). On a real cluster where the exchange is network-bound and
-    executors are compute-rich, the zero-shuffle shape is the one
-    you'd pick; measure on your hardware.
 
     Shingle hashes are formed INSIDE each row — ``transform`` over shingle
     start offsets hashing the k word slots with ``xxhash64(w_i..w_{i+k-1},
@@ -185,29 +169,6 @@ def minhash_signatures(
             F.lit(_MERSENNE),
         )
 
-    if in_row:
-        grams = base.select(
-            "id",
-            F.transform(
-                F.sequence(F.lit(0), n_shingles - 1), gram_hash
-            ).alias("_h"),
-        )
-
-        def perm_min(a: int, b: int):
-            return F.array_min(
-                F.transform(
-                    F.col("_h"),
-                    lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE)),
-                )
-            )
-
-        return grams.select(
-            "id",
-            *[
-                perm_min(a, b).alias(f"sig_{i}")
-                for i, (a, b) in enumerate(_minhash_params(num_perm, seed))
-            ],
-        )
     # Explode the shingle OFFSETS first, hash per row after: the previous
     # spelling built the whole hash array with F.transform and exploded it,
     # but higher-order-function lambdas are INTERPRETED per element (the
@@ -218,8 +179,7 @@ def minhash_signatures(
     # and the projection pipeline within one codegen stage, and only
     # (id, h) reaches the aggregate. Byte-identical output (same xxhash64
     # inputs; r16 A/B: 0 differing rows, hashed stage 0.29s -> 0.18s,
-    # signatures 0.84s -> 0.71s at sf0.1). The in_row path above keeps the
-    # transform spelling: its whole point is staying a pure projection.
+    # signatures 0.84s -> 0.71s at sf0.1).
     exploded = base.select(
         "id", "_w", F.explode(F.sequence(F.lit(0), n_shingles - 1)).alias("_i")
     )
@@ -373,89 +333,6 @@ def minhash_lsh_candidates(
     )
 
 
-# Verify-path switch for jaccard_pairs: at or below this many candidate
-# pairs the per-pair array_intersect spelling wins (one join, no extra
-# shuffles — its ~55µs/pair only adds up on big sets), above it the
-# inverted-index counting path wins (codegen joins amortize its 2-3 extra
-# fixed stages). Crossover measured r17 at sf0.1: the array path was ~3%
-# faster at dedup_minhash's ~3k pairs while the inverted path was 2x
-# faster at crosscorpus/similarity_join's 180-250k pairs. Both paths are
-# value-identical (tests/test_r17_optimizations.py pins them against
-# each other), so this is a pure cost-based plan choice, like the
-# BROADCAST_IDS_MAX broadcast guard.
-ARRAY_VERIFY_MAX_PAIRS = 50_000
-
-
-def _jaccard_pairs_arrays(
-    df: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    shingle_words: int,
-    checkpoint_dir: str | None,
-    df_b: DataFrame | None,
-    prune_below: float | None,
-    ids_fit: bool,
-) -> DataFrame:
-    """Small-candidate-set verify: shingle ARRAYS per candidate doc and a
-    per-pair ``array_intersect`` — the pre-r17 jaccard_pairs spelling,
-    kept for pair sets under ARRAY_VERIFY_MAX_PAIRS, plus the same
-    optional size-band prune as the inverted path (sizes read off the
-    arrays; NULL sizes never pruned)."""
-    from mortar_parquet_support_spark.functions import word_shingles
-
-    def _cand_shingles(src: DataFrame, ids: DataFrame) -> DataFrame:
-        if ids_fit:
-            ids = F.broadcast(ids)
-        return materialize(
-            src.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text"))
-            .join(ids, "id", "left_semi")
-            .select("id", word_shingles(F.col("_text"), shingle_words).alias("sh")),
-            checkpoint_dir=checkpoint_dir,
-        )
-
-    if df_b is None:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias("id"))
-            .unionByName(pairs.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        sh_a = sh_b = _cand_shingles(df, cand_ids)
-    else:
-        sh_a = _cand_shingles(df, pairs.select(F.col("id_a").alias("id")).distinct())
-        sh_b = _cand_shingles(df_b, pairs.select(F.col("id_b").alias("id")).distinct())
-    out = pairs.join(
-        sh_a.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"),
-        "id_a",
-    ).join(
-        sh_b.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"),
-        "id_b",
-    )
-    if prune_below is not None and prune_below > 0:
-        t = F.lit(float(prune_below))
-        la, lb = F.size("sh_a"), F.size("sh_b")
-        out = out.filter(
-            F.col("sh_a").isNull()
-            | F.col("sh_b").isNull()
-            | (
-                (lb >= F.ceil(t * la - F.lit(1e-9)))
-                & (lb <= F.floor(la / t + F.lit(1e-9)))
-            )
-        )
-    # bind the intersection once — referenced by both the numerator and
-    # the union denominator
-    out = out.withColumn(
-        "_inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    )
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - F.col("_inter")
-    return out.select(
-        "id_a",
-        "id_b",
-        F.when(union > 0, F.col("_inter") / union).otherwise(F.lit(1.0)).alias("jaccard"),
-    )
-
-
 def _shingle_token_rows(
     docs: DataFrame, shingle_words: int, *, distinct: bool = True
 ) -> DataFrame:
@@ -471,10 +348,12 @@ def _shingle_token_rows(
     measured 4.0s per corpus pass at sf0.1 where this is a fraction of
     that. A NULL ``_text`` doc emits ONE (id, NULL) row — word_shingles'
     NULL array carried through the row formulation (callers map it to a
-    NULL size and exclude it from token joins)."""
+    NULL size and exclude it from token joins). Columns other than
+    ``_text`` ride along onto every token row of their document."""
     from mortar_parquet_support_spark.functions import ws_tokens
 
-    base = docs.select("id", ws_tokens(F.col("_text")).alias("_w"))
+    keep = [c for c in docs.columns if c != "_text"]
+    base = docs.select(*keep, ws_tokens(F.col("_text")).alias("_w"))
     # offsets 0..max(n-k, 0): n >= k gives the n-k+1 grams; n < k gives
     # one offset whose past-the-end gets are NULL and concat_ws skips
     # them — exactly word_shingles' whole-document fallback string.
@@ -483,7 +362,7 @@ def _shingle_token_rows(
     # ever vanish (an inner-join consumer would silently flip that
     # doc's pairs from the jaccard-1.0 NULL contract to dropped).
     ex = base.select(
-        "id",
+        *keep,
         "_w",
         F.explode_outer(
             F.sequence(
@@ -499,7 +378,7 @@ def _shingle_token_rows(
             *[F.get(F.col("_w"), F.col("_i") + j) for j in range(shingle_words)],
         ),
     )
-    rows = ex.select("id", tok.alias("tok"))
+    rows = ex.select(*keep, tok.alias("tok"))
     # ``distinct=False`` skips the per-(id, tok) dedup shuffle for
     # consumers whose downstream is dedup-invariant (contaminated_ids:
     # semi-join + distinct-id); set semantics callers keep the default.
@@ -515,168 +394,137 @@ def jaccard_pairs(
     shingle_words: int = 3,
     checkpoint_dir: str | None = None,
     df_b: DataFrame | None = None,
-    prune_below: float | None = None,
 ) -> DataFrame:
     """Exact word-shingle Jaccard for given (id_a, id_b) candidate pairs.
-    Shingle arrays are computed ONLY for documents that appear in a pair
-    (semi-join first — at 100 TB the candidate set is orders of magnitude
-    smaller than the corpus).
+    Shingle tokens are computed ONLY for documents that appear in a pair,
+    once per document (join first — at 100 TB the candidate set is orders
+    of magnitude smaller than the corpus).
 
-    Scoring (r17), chosen by candidate-set size (ARRAY_VERIFY_MAX_PAIRS):
-    small sets keep the per-pair ``array_intersect`` spelling
-    (:func:`_jaccard_pairs_arrays`); large sets use per-pair
-    inverted-index counting — each candidate pair fans out to its
-    id_a-side shingles and equi-joins the id_b side's exploded shingles,
-    so |A ∩ B| falls out of one codegen'd count aggregate (shingle sets
-    are DISTINCT, so the match count IS the set intersection — the same
-    identity the dedup_minhash DuckDB oracle rests on). The per-pair
-    ArrayIntersect builds a hash set over both string arrays per
-    evaluation, measured ~55µs/pair — 13.7s of crosscorpus_dedup's 16s
-    at sf0.1 — where the join formulation shuffles pair-bounded
-    (id, token) rows through whole-stage codegen. The two paths are
-    value-identical: intersection/union are exact integers, and the
-    final division is the same IEEE expression (pinned against each
-    other in tests/test_r17_optimizations.py).
-
-    ``prune_below``: when set (> 0), pairs whose shingle-set SIZES
-    already prove jaccard < prune_below are skipped without scoring:
-    J <= min(|A|,|B|)/max(|A|,|B|), so the band t*|A| <= |B| <= |A|/t
-    (with the similarity_join 1e-9 looseness nudges) is a pure
-    no-false-negative filter. ONLY for callers that drop
-    jaccard < prune_below afterwards (minhash_dedup, crosscorpus_dedup
-    do) — the skipped rows would never survive their threshold filter,
-    so their output is unchanged; a score-everything caller must leave
-    it None. Pairs where either size is NULL (NULL-text documents) are
-    never pruned — they keep the historical jaccard 1.0 contract below.
+    Scoring is inverted-index counting in ONE shuffle: each candidate
+    document joins the list of pairs it belongs to, is shingled, and
+    every (pair, side, token) row goes to its pair's partition. There a
+    (pair, token) group records which sides hold the token, and a second
+    aggregate over the same partitioning counts |A|, |B| and |A ∩ B| per
+    pair (a group IS one set element, so the both-sides count is the set
+    intersection — the identity the dedup_minhash DuckDB oracle rests
+    on). Intersection and union are exact integers, so the score equals
+    the per-pair ``array_intersect`` formula bit for bit. A pair naming
+    an id absent from its corpus is dropped; a NULL-text document has a
+    NULL shingle set and its pairs score 1.0.
 
     With ``df_b`` (cross-corpus mode): ``id_a`` ids resolve against ``df``
-    and ``id_b`` ids against ``df_b`` — two independent pruned shingle
-    frames instead of one shared one.
+    and ``id_b`` ids against ``df_b`` — each corpus is scanned once for
+    its own side.
 
-    CONTRACT: ids must be unique per side (the family-wide dedup
-    identity — minhash_signatures/simhash_dedup already merge duplicate
-    ids upstream). A duplicated id merges its copies' shingles into one
-    pair row on the inverted path where the array path emits one row per
-    copy — unique ids make the two paths indistinguishable (pinned)."""
-    # Join FIRST, project shingles after: written select-then-join, Catalyst's
-    # PushDownLeftSemiAntiJoin moves the join below the projection and the
-    # (interpreted, per-element) shingle transform runs over the whole corpus
-    # instead of just candidate docs. Join-then-select keeps the expensive
-    # expression above the prune — there is no rule that sinks projections
-    # into joins. Each shingle frame is MATERIALIZED because multiple legs
-    # consume it (the size join and the token-explode join; same-corpus,
-    # both pair sides too): left lazy, the corpus semi-scan and shingle
-    # transform would execute once per consumer — full extra corpus scans
-    # at 100 TB.
+    Duplicates: ids are expected unique per side (minhash_signatures and
+    simhash_dedup already merge duplicate ids upstream). A duplicated id
+    is one document whose shingle set is the UNION of its copies' sets,
+    so each pair naming it yields one row. A duplicated (id_a, id_b)
+    input row is kept: every copy is output, each with the same score.
+
+    ``pairs`` is read three times (the broadcast guard's count, the
+    per-document pair lists, the per-pair copy count): callers pass a
+    materialized frame. The result is returned MATERIALIZED
+    (``checkpoint_dir`` picks the tier, see :func:`materialize`)."""
     # the id set is bounded by 2x the pair count, so ONE cheap count over
-    # the (caller-materialized) pairs frame guards every broadcast below —
-    # counting the distinct id frames themselves would execute each
-    # distinct twice (once for the count, again inside the join). Candidate
-    # id sets are pair-count-bounded, which aggressive banding can blow
-    # past at corpus scale; above the bound the semi joins fall back to the
-    # planner's shuffle strategy.
-    n_pairs = pairs.count()
-    ids_fit = n_pairs * 2 <= BROADCAST_IDS_MAX
-    if n_pairs <= ARRAY_VERIFY_MAX_PAIRS:
-        return _jaccard_pairs_arrays(
-            df,
-            pairs,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_words=shingle_words,
-            checkpoint_dir=checkpoint_dir,
-            df_b=df_b,
-            prune_below=prune_below,
-            ids_fit=ids_fit,
+    # the (caller-materialized) pairs frame guards the broadcast below.
+    # Candidate id sets are pair-count-bounded, which aggressive banding
+    # can blow past at corpus scale; above the bound the join falls back
+    # to the planner's shuffle strategy.
+    ids_fit = pairs.count() * 2 <= BROADCAST_IDS_MAX
+
+    # side tags: 0 = the id_a document, 1 = the id_b document
+    def side(key: str, tag: int) -> DataFrame:
+        return pairs.select(
+            F.col(key).alias("id"), "id_a", "id_b", F.lit(tag).alias("_s")
         )
 
-    def _cand_tokens(src: DataFrame, ids: DataFrame) -> DataFrame:
+    def fan_out(src: DataFrame, keyed: DataFrame) -> DataFrame:
+        # one row per candidate document carrying its distinct pairs, so
+        # the document is shingled once however many pairs it is in; the
+        # inner join drops non-candidate documents BEFORE shingling
+        lists = keyed.groupBy("id").agg(
+            F.collect_set(F.struct("id_a", "id_b", "_s")).alias("_ps")
+        )
         if ids_fit:
-            ids = F.broadcast(ids)
-        cand = src.select(
+            lists = F.broadcast(lists)
+        docs = src.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("_text")
-        ).join(ids, "id", "left_semi")
-        return materialize(
-            _shingle_token_rows(cand, shingle_words),
-            checkpoint_dir=checkpoint_dir,
+        ).join(lists, "id")
+        return (
+            _shingle_token_rows(docs, shingle_words, distinct=False)
+            .select(F.explode("_ps").alias("_p"), "tok")
+            .select("_p.*", "tok")
         )
 
     if df_b is None:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias("id"))
-            .unionByName(pairs.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        tok_a = tok_b = _cand_tokens(df, cand_ids)
+        rows = fan_out(df, side("id_a", 0).unionByName(side("id_b", 1)))
     else:
-        tok_a = _cand_tokens(df, pairs.select(F.col("id_a").alias("id")).distinct())
-        tok_b = _cand_tokens(df_b, pairs.select(F.col("id_b").alias("id")).distinct())
-
-    def _sizes(tokf: DataFrame, id_out: str, l_out: str) -> DataFrame:
-        # count("tok") skips the NULL-token row a NULL-text doc emits, so
-        # 0 non-null tokens <=> word_shingles would be NULL (every real
-        # document has >= 1 gram — the whole-text fallback guarantees it);
-        # surface that as a NULL size, the value size(sh) produced.
-        n = F.col("_n")
-        return tokf.groupBy("id").agg(F.count("tok").alias("_n")).select(
-            F.col("id").alias(id_out),
-            F.when(n == 0, F.lit(None)).otherwise(n).alias(l_out),
-        )
-
-    sized = pairs.join(_sizes(tok_a, "id_a", "_la"), "id_a").join(
-        _sizes(tok_b, "id_b", "_lb"), "id_b"
+        rows = fan_out(df, side("id_a", 0)).unionByName(fan_out(df_b, side("id_b", 1)))
+    # one marker row per input pair row (side 2): its count in the pair's
+    # NULL-token group is the number of copies to output
+    marks = pairs.select(
+        "id_a", "id_b", F.lit(2).alias("_s"), F.lit(None).cast("string").alias("tok")
     )
-    if prune_below is not None and prune_below > 0:
-        t = F.lit(float(prune_below))
-        sized = sized.filter(
-            F.col("_la").isNull()
-            | F.col("_lb").isNull()
-            | (
-                (F.col("_lb") >= F.ceil(t * F.col("_la") - F.lit(1e-9)))
-                & (F.col("_lb") <= F.floor(F.col("_la") / t + F.lit(1e-9)))
-            )
-        )
-    # `sized` feeds the hit-count leg and the final left join; it is NOT
-    # barriered — both replays are hash joins of the caller-materialized
-    # pairs frame against projections of the checkpointed shingle frames,
-    # cheaper than one more eager checkpoint job (the r16
-    # fingerprint_band_pairs lesson).
-    hits = (
-        # distinct BEFORE the token fan-out: a caller-supplied duplicate
-        # (id_a, id_b) row would otherwise multiply the per-pair match
-        # count (r17 review repro: jaccard 0.5 instead of 0.2); the
-        # duplicate OUTPUT rows themselves are preserved — the left join
-        # below hands every copy the same (correct) count, exactly like
-        # the array path scoring each copy independently.
-        sized.select("id_a", "id_b")
-        .distinct()
-        .join(
-            tok_a.filter(F.col("tok").isNotNull()).select(
-                F.col("id").alias("id_a"), F.col("tok").alias("_tok")
-            ),
-            "id_a",
-        )
-        .join(
-            tok_b.filter(F.col("tok").isNotNull()).select(
-                F.col("id").alias("id_b"), F.col("tok").alias("_tok")
-            ),
-            ["id_b", "_tok"],
+    s = F.col("_s")
+    # both aggregates need only (id_a, id_b) clustering: one exchange.
+    # The per-token group dedupes tokens (a shingle repeated in a document,
+    # a duplicated id's shared shingles), so the token rows skip their own
+    # distinct shuffle.
+    per_tok = (
+        rows.unionByName(marks)
+        .repartition("id_a", "id_b")
+        .groupBy("id_a", "id_b", "tok")
+        .agg(
+            F.max((s == 0).cast("int")).alias("_in_a"),
+            F.max((s == 1).cast("int")).alias("_in_b"),
+            F.sum((s == 2).cast("int")).alias("_copies"),
         )
     )
-    counts = hits.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("_cnt"))
-    out = sized.join(counts, ["id_a", "id_b"], "left")
-    # NULL shingles (NULL-text doc) -> NULL intersection -> NULL union ->
-    # the when() falls through to 1.0, exactly the r16 array_intersect
-    # NULL propagation; zero-hit pairs score 0 hits, not a dropped row
-    inter = F.when(
-        F.col("_la").isNull() | F.col("_lb").isNull(), F.lit(None)
-    ).otherwise(F.coalesce(F.col("_cnt"), F.lit(0)))
-    out = out.withColumn("_inter", inter.cast("double"))
-    union = (F.col("_la") + F.col("_lb")).cast("double") - F.col("_inter")
-    return out.select(
+    real = F.col("tok").isNotNull()
+    in_a, in_b = F.col("_in_a") == 1, F.col("_in_b") == 1
+    per_pair = (
+        per_tok.groupBy("id_a", "id_b")
+        .agg(
+            F.max("_copies").alias("_copies"),
+            F.max("_in_a").alias("_has_a"),
+            F.max("_in_b").alias("_has_b"),
+            F.count(F.when(real & in_a, 1)).alias("_na"),
+            F.count(F.when(real & in_b, 1)).alias("_nb"),
+            F.count(F.when(real & in_a & in_b, 1)).alias("_cnt"),
+        )
+        # both documents found in their corpus (a NULL-text document still
+        # emits its one NULL-token row)
+        .filter((F.col("_has_a") == 1) & (F.col("_has_b") == 1))
+    )
+    # 0 non-null tokens <=> word_shingles would be NULL (every real
+    # document has >= 1 gram — the whole-text fallback guarantees it):
+    # a NULL size, NULL intersection and NULL union, so the when() below
+    # falls through to 1.0; zero-hit pairs score 0 hits
+    la = F.when(F.col("_na") > 0, F.col("_na"))
+    lb = F.when(F.col("_nb") > 0, F.col("_nb"))
+    inter = F.when(la.isNull() | lb.isNull(), F.lit(None)).otherwise(F.col("_cnt"))
+    scored = per_pair.select(
         "id_a",
         "id_b",
-        F.when(union > 0, F.col("_inter") / union).otherwise(F.lit(1.0)).alias("jaccard"),
+        "_copies",
+        inter.cast("double").alias("_inter"),
+        (la + lb).cast("double").alias("_sizes"),
+    )
+    union = F.col("_sizes") - F.col("_inter")
+    # materialized because consumers read the scores more than once
+    # (connected_components' edge union reads both directions): left lazy,
+    # each read re-plans and re-runs the whole shingle fan-out
+    return materialize(
+        scored.select(
+            "id_a",
+            "id_b",
+            F.when(union > 0, F.col("_inter") / union)
+            .otherwise(F.lit(1.0))
+            .alias("jaccard"),
+            F.explode(F.sequence(F.lit(1), F.col("_copies"))).alias("_copy"),
+        ).drop("_copy"),
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -710,8 +558,8 @@ def minhash_dedup(
     tune num_perm DOWN (with bands to match) before anything else when
     throughput matters more than recall granularity; the verify stage is
     exact and already pair-bounded, there is nothing to win there."""
-    # Materialize the candidate pairs: jaccard_pairs references them three
-    # times (both legs of the id union + the scoring join); without the cut,
+    # Materialize the candidate pairs: jaccard_pairs reads them three
+    # times (its broadcast guard, the pair lists, the copy count); without the cut,
     # each reference re-executes the whole LSH candidate generation. The
     # pair set is the smallest frame in the pipeline — always safe to cache.
     # LAZY (r17, the bpe_train pattern): jaccard_pairs' very next step is
@@ -739,9 +587,6 @@ def minhash_dedup(
         text_col=text_col,
         shingle_words=shingle_words,
         checkpoint_dir=checkpoint_dir,
-        # size-band skip is output-invariant here: every pruned pair is
-        # provably under the threshold this filter applies
-        prune_below=threshold,
     )
     return scored.filter(F.col("jaccard") >= threshold)
 
@@ -767,14 +612,14 @@ def crosscorpus_dedup(
     ids are never compared across sides, only texts.
 
     Scale shape — both sides can be 100 TB:
-    - each corpus builds in-row minhash signatures independently (shuffle
+    - each corpus builds minhash signatures independently (shuffle
       = ``num_perm`` longs/doc per corpus, see minhash_signatures);
     - the SAME (num_perm, bands, seed) puts both corpora in one bucket
       space, so candidates come from a banded-bucket EQUI-join BETWEEN
       the corpora — never all-pairs, no self-pairs, neither side
       broadcast, AQE splits hot buckets;
     - exact-Jaccard verify computes shingles only for candidate docs,
-      pruned per side (jaccard_pairs cross-corpus mode).
+      one scan per side (jaccard_pairs cross-corpus mode).
     Compare ``decontaminate`` (curation.py), which broadcasts a SMALL
     eval set; this operator is the symmetric case where neither side fits
     in a broadcast.
@@ -791,9 +636,7 @@ def crosscorpus_dedup(
     # leg of one between-corpora join, so the signature pipelines run
     # lazily (once each) inside the candidate-materialize job instead of
     # paying two eager checkpoint jobs + two full banded-frame writes
-    # first. (The per-side shingle frames in jaccard_pairs KEEP their
-    # barriers: the r17 inverted-index scoring consumes each twice — size
-    # leg + token leg.)
+    # first.
     lb = _banded_frame(
         left, id_col=id_col, text_col=text_col, num_perm=num_perm,
         bands=bands, shingle_words=shingle_words, seed=seed,
@@ -821,7 +664,7 @@ def crosscorpus_dedup(
     scored = jaccard_pairs(
         left, cands, id_col=id_col, text_col=text_col,
         shingle_words=shingle_words, checkpoint_dir=checkpoint_dir,
-        df_b=right, prune_below=threshold,
+        df_b=right,
     )
     return scored.filter(F.col("jaccard") >= threshold)
 
@@ -1531,8 +1374,7 @@ def connected_components(
     else:
         # silently returning intermediate labels would split one true
         # cluster into several, each keeping its own "representative" —
-        # duplicates would survive resolution with no warning (same
-        # contract as plans/closure.py's fixpoint)
+        # duplicates would survive resolution with no warning
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations; raise max_iterations (label propagation needs "

@@ -368,7 +368,6 @@ def linear_classifier_score(
     ngram: int = 2,
     bias: float = 0.0,
     keep_columns: bool = False,
-    dense_max_buckets: int = 0,
 ) -> DataFrame:
     """Logistic-linear classifier inference over hashed n-gram features —
     the distributed serving shape of a fastText-style quality filter:
@@ -377,120 +376,28 @@ def linear_classifier_score(
     no tokens scoring sigmoid(bias) with n_features = 0 — or, with
     ``keep_columns``, all of ``df``'s columns plus the two.
 
-    Two physical plans, same result (bit-identical scores, tested).
-    One failure-shape difference, stated so callers wrap both: a model
-    carrying duplicate feature ids is rejected EAGERLY as ValueError by
-    the dense path (its driver collect is free there) but AT ACTION
-    TIME as Spark's ``USER_RAISED_EXCEPTION`` by the joined path, whose
-    r15 in-plan guard exists precisely to avoid an extra driver job per
-    scoring call — catch ``(ValueError, Exception-from-action)`` when
-    retrying a dirty model, or aggregate weights up front.
+    The corpus explodes to one row per gram occurrence, broadcast-joins
+    the weight table (maybe_broadcast: hinted only while the estimate
+    fits, sort-merge above it), and mean-pools per doc — the shuffle
+    carries two doubles per document thanks to map-side partials.
+    ``keep_columns`` re-joins the FULL rows (an id-keyed shuffle of the
+    whole corpus including text). Features the table lacks weigh 0 but
+    still count in the mean (standard hashing-trick inference; a sparse
+    model stays sparse).
 
-    - **joined (default)**: the corpus explodes to one row per gram
-      occurrence, broadcast-joins the weight table (maybe_broadcast:
-      hinted only while the estimate fits, sort-merge above it), and
-      mean-pools per doc — the shuffle carries two doubles per document
-      thanks to map-side partials. ``keep_columns`` re-joins the FULL
-      rows (an id-keyed shuffle of the whole corpus including text) —
-      honest to ask for explicitly, and measured cheap even at sf10
-      locally (the shuffle is bytes; the CPU is grams).
-    - **dense (opt-in: n_buckets <= dense_max_buckets)**: the weight
-      table collects to a dense double array embedded as ONE literal
-      constant and the score is computed IN-ROW via a struct-state
-      ``F.aggregate`` fold — no explode, no join, NO SHUFFLE AT ALL
-      (``keep_columns`` becomes a free projection).
+    A model carrying a duplicate feature id that some document's gram
+    references is rejected AT ACTION TIME: an action that computes a
+    score fails with Spark's ``USER_RAISED_EXCEPTION`` naming the id,
+    before any weight can be double-counted; a duplicate no gram
+    references cannot change a score and is tolerated. Aggregate the
+    model to one weight per feature before scoring.
 
-    sf10 profile (500k docs, local[32], r10 — the measured answer to
-    "where do the classifier's seconds go"): the joined plan's cost is
-    ~95% feature construction — gram-string build + explode fan-out
-    8.6s plus the cross-engine-portable md5 hash 3.4s of 13.9s total;
-    the weights join adds ~0 (BroadcastHashJoin held at sf10,
-    plan-asserted in tests/test_plans.py) and the sigmoid/agg is noise.
-    The dense fold measured SLOWER wall-clock (20.1s sf10; 22.4s vs
-    14.5s with keep_columns): higher-order-function lambdas are
-    interpreted, outside whole-stage codegen, and that interpretation
-    tax exceeds the entire shuffle cost on one machine — hence default
-    OFF. Opt in when the deployment's economics invert (network-bound
-    shuffles, or a pipeline that must preserve its partitioning through
-    scoring); the cap is plan-constant bytes: 64k buckets = 512 KB
-    serialized into every task. Features the table lacks weigh 0 but
-    still count in the mean (standard hashing-trick inference; a
-    sparse model stays sparse)."""
+    sf10 profile (500k docs, local[32]): the cost is ~95% feature
+    construction — gram-string build + explode fan-out 8.6s plus the
+    cross-engine-portable md5 hash 3.4s of 13.9s total; the weights join
+    adds ~0 (BroadcastHashJoin held at sf10, plan-asserted in
+    tests/test_plans.py) and the sigmoid/agg is noise."""
     from mortar_parquet_support_spark.plans.hints import maybe_broadcast
-
-    if n_buckets <= dense_max_buckets:
-        dense = [0.0] * n_buckets
-        # bounded collect: the in-range filter runs IN-PLAN, so the
-        # driver materializes at most n_buckets rows even when the
-        # weights table carries out-of-range ids (a model trained with a
-        # larger bucket count, concatenated model versions)
-        fid = F.col(feature_col).cast("long")
-        seen: set = set()
-        for r in (
-            weights.select(fid.alias("f"), F.col(weight_col).cast("double"))
-            .filter((F.col("f") >= 0) & (F.col("f") < n_buckets))
-            .collect()
-        ):
-            # duplicate ids must reject LOUDLY in BOTH paths: dict-style
-            # assignment here would keep an arbitrary row while the
-            # joined path FANS OUT on the duplicate (double-counted
-            # weight + inflated n_features) — the "two physical plans,
-            # same result" contract silently broken (review r14)
-            if r[0] in seen:
-                raise ValueError(
-                    f"duplicate feature id {r[0]} in weights — aggregate "
-                    "the model to one weight per feature before scoring"
-                )
-            seen.add(r[0])
-            dense[r[0]] = r[1] if r[1] is not None else 0.0
-        arr = F.lit(dense)
-        grams = _hashed_gram_ids(
-            F.filter(_lower_words(F.col(text_col)), lambda t: t != ""),
-            n_buckets=n_buckets,
-            ngram=ngram,
-        )
-        # one struct-state fold so the gram subtree is referenced ONCE
-        # (separate sum/size references would let CollapseProject
-        # re-inline — and re-hash — the grams per reference)
-        acc = F.aggregate(
-            grams,
-            F.struct(
-                F.lit(0.0).alias("z"), F.lit(0).cast("int").alias("n")
-            ),
-            lambda a, g: F.struct(
-                (
-                    a.getField("z")
-                    + F.element_at(arr, (g + 1).cast("int"))
-                ).alias("z"),
-                (a.getField("n") + 1).alias("n"),
-            ),
-        )
-        # stage the fold ONCE as its own column: it is referenced three
-        # times below, and CollapseProject keeps the staging projection
-        # because the alias is non-cheap and multi-referenced (collapsing
-        # would re-run the whole tokenize+hash fold per reference)
-        staged = df.withColumn("__cls_acc", acc)
-        # cast to long: the joined path's F.count emits bigint, and "two
-        # physical plans, same result" must hold at the SCHEMA level too
-        # (unionByName / parquet append across paths)
-        n_feat = F.coalesce(
-            F.col("__cls_acc").getField("n").cast("long"), F.lit(0).cast("long")
-        )
-        margin = F.lit(bias) + F.when(
-            n_feat > 0, F.col("__cls_acc").getField("z") / n_feat
-        ).otherwise(F.lit(0.0))
-        score = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-        if keep_columns:
-            return (
-                staged.withColumn("n_features", n_feat)
-                .withColumn("score", score)
-                .drop("__cls_acc")
-            )
-        return staged.select(
-            F.col(id_col),
-            n_feat.alias("n_features"),
-            score.alias("score"),
-        )
 
     w = weights.select(
         F.col(feature_col).cast("long").alias("__fid"),
@@ -504,9 +411,8 @@ def linear_classifier_score(
     # the score aggregate below raises AT EXECUTION the moment any doc
     # gram touches a feature whose count exceeds 1 — before that
     # feature's weight can be double-counted. A duplicate id NO gram
-    # references is tolerated (it cannot affect any score; the dense
-    # path still rejects it eagerly since its collect is free there) —
-    # and Catalyst's projection deferral makes a weights-side raise
+    # references is tolerated (it cannot affect any score) — and
+    # Catalyst's projection deferral makes a weights-side raise
     # unreliable for exactly those unreferenced rows anyway. The
     # (count = 1) path passes the single weight through bit-identically.
     # Scope, stated precisely: the raise fires whenever a score is

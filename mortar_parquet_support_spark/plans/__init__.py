@@ -1,5 +1,5 @@
-"""Query planning: SPARQL-subset -> DataFrame compiler, and the transitive
-closure builder that implements property-path ``*`` reasoning."""
+"""Query planning: the SPARQL-subset compiler, which matches graph patterns
+on the driver and returns DataFrames, and the driver-side transitive
+closure (``closure_pairs``) behind its property-path steps."""
 
-from mortar_parquet_support_spark.plans.closure import transitive_closure  # noqa: F401
 from mortar_parquet_support_spark.plans.sparql import SparqlEngine, parse_sparql  # noqa: F401

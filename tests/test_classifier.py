@@ -82,14 +82,11 @@ def test_weights_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_dense_path_equals_joined_and_never_shuffles(spark):
-    """The opt-in dense serving plan (weights as one literal array,
-    in-row struct fold) must score BIT-identically to the default
-    explode+broadcast-join plan — including degenerate docs — with
-    zero exchanges and zero joins; keep_columns rides along as a free
-    projection. (Why it's opt-in: the interpreted HOF fold measured
-    slower than codegen'd explode+join on local[32] — see the operator
-    docstring's sf10 profile.)"""
+def test_keep_columns_appends_scores_to_input_rows(spark):
+    """``keep_columns`` returns every input column in order, then
+    n_features and score — with the same types and the same values as
+    the default (id, n_features, score) output, degenerate docs
+    included."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox"),
@@ -104,27 +101,20 @@ def test_dense_path_equals_joined_and_never_shuffles(spark):
         F.col("id").alias("feature"),
         ((F.col("id") % 7) / 7.0 - 0.4).alias("weight"),
     )
-    dense = linear_classifier_score(
-        docs, weights, n_buckets=4096, bias=0.1, dense_max_buckets=1 << 16
-    )
-    joined = linear_classifier_score(docs, weights, n_buckets=4096, bias=0.1)
-    d = {r.doc_id: (r.n_features, r.score) for r in dense.collect()}
-    j = {r.doc_id: (r.n_features, r.score) for r in joined.collect()}
-    assert d == j  # exact float equality: same single IEEE op chain
-    # "same result" includes the SCHEMA: a parquet append / unionByName
-    # across the two paths must not see int vs bigint n_features
-    assert dense.schema == joined.schema
-    plan = plan_str(dense)
-    assert "Exchange" not in plan and "Join" not in plan
-    # the fold is staged once — CollapseProject must not re-inline the
-    # tokenize+hash subtree per reference (md5 appears once in the plan)
-    assert plan.count("md5") == 1
+    base = linear_classifier_score(docs, weights, n_buckets=4096, bias=0.1)
     kc = linear_classifier_score(
-        docs, weights, n_buckets=4096, keep_columns=True,
-        dense_max_buckets=1 << 16,
+        docs, weights, n_buckets=4096, bias=0.1, keep_columns=True
     )
     assert kc.columns == ["doc_id", "text", "n_features", "score"]
-    assert "Exchange" not in plan_str(kc)
+    # a parquet append / unionByName across the two shapes must not see
+    # int vs bigint n_features
+    assert kc.select(*base.columns).schema == base.schema
+    b = {r.doc_id: (r.n_features, r.score) for r in base.collect()}
+    k = {r.doc_id: (r.text, r.n_features, r.score) for r in kc.collect()}
+    assert {i: v[1:] for i, v in k.items()} == b
+    assert {i: v[0] for i, v in k.items()} == {
+        r.doc_id: r.text for r in docs.collect()
+    }
 
 
 def test_train_linear_classifier_converges_and_serves(spark):
@@ -215,19 +205,16 @@ def test_train_linear_classifier_matches_numpy_reference(spark):
         assert abs(got[f] - v) < 1e-10, f
 
 
-def test_duplicate_weight_rejection_both_paths(spark):
-    """The duplicate-feature guard's exception surface, pinned per path
-    (ADVICE r15 — the r15 in-plan rewrite was verified empirically but
-    untested, so a refactor or Catalyst change could silently drop it):
+def test_duplicate_weight_rejection(spark):
+    """The duplicate-feature guard's exception surface, pinned so a
+    refactor or Catalyst change cannot silently drop it:
 
-    - joined path: a duplicate id a document gram REFERENCES raises at
-      action time (the in-plan raise_error aggregate, text.py) — never
-      a silently double-counted weight;
-    - joined path: a duplicate id NO gram references is tolerated (it
-      cannot affect any score; Catalyst's projection deferral makes a
-      weights-side raise unreliable for exactly those rows);
-    - dense path: ANY in-range duplicate raises ValueError EAGERLY at
-      call time, before an action exists.
+    - a duplicate id a document gram REFERENCES raises at action time
+      (the in-plan raise_error aggregate, text.py) — never a silently
+      double-counted weight;
+    - a duplicate id NO gram references is tolerated (it cannot affect
+      any score; Catalyst's projection deferral makes a weights-side
+      raise unreliable for exactly those rows).
     """
     docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
     fid_a = docs.select(
@@ -254,12 +241,3 @@ def test_duplicate_weight_rejection_both_paths(spark):
     )
     rows = linear_classifier_score(docs, dup_unreferenced, n_buckets=64).collect()
     assert rows and rows[0].n_features == 3  # scored clean, no raise
-
-    with pytest.raises(ValueError, match="duplicate feature id"):
-        linear_classifier_score(
-            docs, dup_referenced, n_buckets=64, dense_max_buckets=64
-        )  # NO action: the dense guard is the eager driver-side collect
-    with pytest.raises(ValueError, match="duplicate feature id"):
-        linear_classifier_score(
-            docs, dup_unreferenced, n_buckets=64, dense_max_buckets=64
-        )  # dense rejects even unreferenced dups (its collect is free)

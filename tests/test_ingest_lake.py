@@ -189,6 +189,25 @@ def test_composite_large_id_set_stays_distributed(spark, lake_dir, monkeypatch):
     assert out_small.count() == 5
 
 
+def test_data_uuids_large_id_set_uses_semi_join(spark, lake_dir, monkeypatch):
+    """``data_uuids`` honours ``IN_LIST_MAX`` like the SPARQL bridge: above
+    the cap its ids reach the scan through a LEFT SEMI join instead of an
+    IN-list, returning the same rows."""
+    import mortar_parquet_support_spark.client as client_mod
+    from mortar_parquet_support_spark.client import Client
+    from tests.conftest import plan_str
+
+    c = Client(spark, lake_root=lake_dir)
+    ids = [U1.upper(), U2]
+    small = c.data_uuids(ids)
+    assert "LeftSemi" not in plan_str(small)
+    monkeypatch.setattr(client_mod, "IN_LIST_MAX", 1)
+    large = c.data_uuids(ids)
+    assert "LeftSemi" in plan_str(large)
+    assert sorted(large.collect()) == sorted(small.collect())
+    assert large.count() == 5
+
+
 def _jobs_during(spark, action) -> int:
     """Spark jobs ``action`` submits, counted through a job group (a count
     of the status store's job list saturates at its retention limit)."""

@@ -4500,39 +4500,6 @@ def test_temperature_mixture_fused_equals_composition(spark):
         )
 
 
-def test_minhash_signatures_in_row_identical(spark):
-    """The opt-in zero-shuffle in-row signature path (array_min over a
-    transformed hash array) is byte-identical to the default
-    explode + min-agg path — same xxhash64/pmod inputs — including
-    short-doc fallback and NULL/empty exclusion; and its plan carries
-    no Exchange at all."""
-    from pyspark.sql import functions as F
-
-    from mortar_parquet_support_spark.operators.dedup import (
-        minhash_signatures,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy cat"),
-        (3, "hi"),                      # short-doc whole-text fallback
-        (4, None),                      # NULL -> no signature row
-        (5, "   "),                     # whitespace-only -> none
-        (6, "one two three four five six seven eight nine ten"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    kw = dict(id_col="id", text_col="text", num_perm=16)
-    a = minhash_signatures(df, **kw)
-    b = minhash_signatures(df, in_row=True, **kw)
-    assert a.columns == b.columns
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert b.count() == 4
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # the whole point of the opt-in
-    default_plan = a._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in default_plan
-
-
 def test_seasonal_decompose_recovers_analytic_components(spark):
     """Classical additive decomposition on trend+sine data must recover
     each component EXACTLY in the interior: a centered MA over one full

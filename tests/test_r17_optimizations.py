@@ -7,7 +7,6 @@ optimizations must be invisible to every consumer:
   interpreted transform), including the NULL-text / short-doc edges;
 - jaccard_pairs' inverted-index scoring == the array_intersect formula,
   including NULL-shingle 1.0, zero-overlap 0.0, and absent-id drops;
-- jaccard_pairs(prune_below=t) drops ONLY pairs provably under t;
 - embedding_dedup exact mode (block pairs + Arrow dimension-loop) ==
   the single-bucket JVM cosine self-join, bit-for-bit, for any
   block_rows choice.
@@ -108,28 +107,14 @@ def _jaccard_reference(df, pairs, *, id_col, text_col, shingle_words=3,
     )
 
 
-@pytest.fixture(params=["array_path", "inverted_path"])
-def verify_path(request, monkeypatch):
-    """Force jaccard_pairs down each of its two verify paths: the tiny
-    test fixtures would otherwise always sit under ARRAY_VERIFY_MAX_PAIRS
-    and never exercise the inverted-index spelling."""
-    import mortar_parquet_support_spark.operators.dedup as dedup
-
-    monkeypatch.setattr(
-        dedup,
-        "ARRAY_VERIFY_MAX_PAIRS",
-        10**9 if request.param == "array_path" else 0,
-    )
-    return request.param
-
-
-def test_jaccard_pairs_matches_array_intersect_reference(spark, verify_path):
+def test_jaccard_pairs_matches_array_intersect_reference(spark):
     docs = spark.createDataFrame(EDGE_DOCS, "id long, _text string")
     # pairs: overlapping, identical, zero-overlap, NULL-text member,
-    # short docs, and an id absent from the corpus (must drop)
+    # short docs, an id absent from the corpus (must drop), self-pairs
+    # (incl. NULL text and repeated shingles) and two absent ids
     pairs = spark.createDataFrame(
         [(1, 2), (1, 10), (1, 9), (2, 3), (3, 4), (1, 5), (5, 6), (6, 7),
-         (4, 9), (1, 99)],
+         (4, 9), (1, 99), (1, 1), (5, 5), (9, 9), (98, 99)],
         "id_a long, id_b long",
     )
     new = jaccard_pairs(docs, pairs, id_col="id", text_col="_text").collect()
@@ -137,7 +122,7 @@ def test_jaccard_pairs_matches_array_intersect_reference(spark, verify_path):
     assert _norm_rows(new) == _norm_rows(old)
 
 
-def test_jaccard_pairs_cross_corpus_matches_reference(spark, verify_path):
+def test_jaccard_pairs_cross_corpus_matches_reference(spark):
     docs = spark.createDataFrame(EDGE_DOCS, "id long, _text string")
     left = docs.filter(F.col("id") % 2 == 0)
     right = docs.filter(F.col("id") % 2 == 1)
@@ -154,11 +139,11 @@ def test_jaccard_pairs_cross_corpus_matches_reference(spark, verify_path):
     assert _norm_rows(new) == _norm_rows(old)
 
 
-def test_jaccard_pairs_duplicate_pairs_score_like_array_path(spark, verify_path):
+def test_jaccard_pairs_duplicate_pairs_score_once_per_copy(spark):
     """A caller-supplied DUPLICATE (id_a, id_b) row must score once per
-    copy with the correct jaccard on BOTH verify paths — the inverted
-    path's pre-review spelling multiplied the match count per copy
-    (review r17: 0.5 instead of 0.2 for a doubled pair)."""
+    copy with the correct jaccard — a spelling that fanned the copies
+    out before counting multiplied the match count (0.5 instead of 0.2
+    for a doubled pair)."""
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "a b c x y")], "id long, _text string"
     )
@@ -172,23 +157,20 @@ def test_jaccard_pairs_duplicate_pairs_score_like_array_path(spark, verify_path)
     ]
 
 
-def test_jaccard_pairs_prune_below_only_drops_subthreshold(spark, verify_path):
-    docs = spark.createDataFrame(EDGE_DOCS, "id long, _text string")
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 10), (1, 9), (2, 3), (3, 4), (1, 5), (5, 6), (4, 9)],
-        "id_a long, id_b long",
+def test_jaccard_pairs_duplicate_id_scores_union_of_copies(spark):
+    """A duplicated id is one document whose shingle set is the union of
+    its copies' sets: one output row per pair, not one per copy."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (1, "x y z"), (2, "a b c x y")],
+        "id long, _text string",
     )
-    t = 0.5
-    full = jaccard_pairs(docs, pairs, id_col="id", text_col="_text")
-    pruned = jaccard_pairs(
-        docs, pairs, id_col="id", text_col="_text", prune_below=t
-    )
-    kept_full = _norm_rows(full.filter(F.col("jaccard") >= t).collect())
-    kept_pruned = _norm_rows(pruned.filter(F.col("jaccard") >= t).collect())
-    # identical surviving rows: the prune may only remove sub-threshold work
-    assert kept_full == kept_pruned
-    # and it genuinely prunes: the size band must drop the (1, 4) shape
-    assert len(pruned.collect()) < len(full.collect())
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    got = jaccard_pairs(docs, pairs, id_col="id", text_col="_text").collect()
+    # id 1: {abc, bcd, cde} | {xyz} (4), id 2: {abc, bcx, cxy} (3), share
+    # 'a b c' -> 1 / (4 + 3 - 1)
+    assert [(r.id_a, r.id_b, round(r.jaccard, 6)) for r in got] == [
+        (1, 2, round(1 / 6, 6))
+    ]
 
 
 EDGE_VECS = [
