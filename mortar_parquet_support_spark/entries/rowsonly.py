@@ -596,7 +596,7 @@ def _strip_boilerplate(spark, sf_dir):
 def _resolve_duplicates(spark, sf_dir):
     """End-to-end dedup resolution (operators/dedup.py resolve_duplicates):
     exact-Jaccard pairs -> connected components -> keep each cluster's
-    min-id doc, one broadcast anti join against the corpus. Pair
+    min-id doc, one anti join against the corpus. Pair
     generation via the shared single-evaluation helper (r16 — see
     _registry._char3_scored_pairs)."""
     from mortar_parquet_support_spark.entries._registry import _char3_scored_pairs

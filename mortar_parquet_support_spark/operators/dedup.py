@@ -38,18 +38,6 @@ from mortar_parquet_support_spark.functions import (
 # hash resolution.
 _MERSENNE = (1 << 31) - 1
 
-# Row bound for force-broadcasting DERIVED id sets (candidate ids, drop
-# lists). These are unbounded at 100 TB — a 40% duplicate rate makes the
-# drop set corpus-scale — and a hardcoded F.broadcast would OOM the driver
-# there, while Catalyst's size estimate for a checkpointed/post-shuffle
-# frame is too unreliable for maybe_broadcast's plan-stats guard. So the
-# sets are materialized anyway (both consumers need the barrier), the
-# exact count is read off the checkpoint, and the hint applies only under
-# this bound (~40-200 MB broadcast depending on id width); above it the
-# join falls back to the planner's shuffle strategy — the correct shape
-# when the id set is genuinely huge.
-BROADCAST_IDS_MAX = 5_000_000
-
 
 def md5_int(col: Column, *, bits: int = 60, salt: str | Column = "") -> Column:
     """Deterministic non-negative int from md5 hex (engine-portable:
@@ -392,7 +380,6 @@ def jaccard_pairs(
     id_col: str,
     text_col: str,
     shingle_words: int = 3,
-    checkpoint_dir: str | None = None,
     df_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-shingle Jaccard for given (id_a, id_b) candidate pairs.
@@ -422,17 +409,12 @@ def jaccard_pairs(
     so each pair naming it yields one row. A duplicated (id_a, id_b)
     input row is kept: every copy is output, each with the same score.
 
-    ``pairs`` is read three times (the broadcast guard's count, the
-    per-document pair lists, the per-pair copy count): callers pass a
-    materialized frame. The result is returned MATERIALIZED
-    (``checkpoint_dir`` picks the tier, see :func:`materialize`)."""
-    # the id set is bounded by 2x the pair count, so ONE cheap count over
-    # the (caller-materialized) pairs frame guards the broadcast below.
-    # Candidate id sets are pair-count-bounded, which aggressive banding
-    # can blow past at corpus scale; above the bound the join falls back
-    # to the planner's shuffle strategy.
-    ids_fit = pairs.count() * 2 <= BROADCAST_IDS_MAX
-
+    ``pairs`` is read three times (the id_a and id_b pair lists, the
+    per-pair copy count): callers pass a materialized frame. The result
+    is LAZY and costs one run of the shingle fan-out per read, so a
+    consumer reads it once. The per-document pair lists carry no join
+    hint: AQE broadcasts them from their shuffle size when they fit under
+    ``autoBroadcastJoinThreshold`` and keeps a shuffle join when not."""
     # side tags: 0 = the id_a document, 1 = the id_b document
     def side(key: str, tag: int) -> DataFrame:
         return pairs.select(
@@ -446,8 +428,6 @@ def jaccard_pairs(
         lists = keyed.groupBy("id").agg(
             F.collect_set(F.struct("id_a", "id_b", "_s")).alias("_ps")
         )
-        if ids_fit:
-            lists = F.broadcast(lists)
         docs = src.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("_text")
         ).join(lists, "id")
@@ -512,20 +492,14 @@ def jaccard_pairs(
         (la + lb).cast("double").alias("_sizes"),
     )
     union = F.col("_sizes") - F.col("_inter")
-    # materialized because consumers read the scores more than once
-    # (connected_components' edge union reads both directions): left lazy,
-    # each read re-plans and re-runs the whole shingle fan-out
-    return materialize(
-        scored.select(
-            "id_a",
-            "id_b",
-            F.when(union > 0, F.col("_inter") / union)
-            .otherwise(F.lit(1.0))
-            .alias("jaccard"),
-            F.explode(F.sequence(F.lit(1), F.col("_copies"))).alias("_copy"),
-        ).drop("_copy"),
-        checkpoint_dir=checkpoint_dir,
-    )
+    return scored.select(
+        "id_a",
+        "id_b",
+        F.when(union > 0, F.col("_inter") / union)
+        .otherwise(F.lit(1.0))
+        .alias("jaccard"),
+        F.explode(F.sequence(F.lit(1), F.col("_copies"))).alias("_copy"),
+    ).drop("_copy")
 
 
 def minhash_dedup(
@@ -559,13 +533,11 @@ def minhash_dedup(
     throughput matters more than recall granularity; the verify stage is
     exact and already pair-bounded, there is nothing to win there."""
     # Materialize the candidate pairs: jaccard_pairs reads them three
-    # times (its broadcast guard, the pair lists, the copy count); without the cut,
-    # each reference re-executes the whole LSH candidate generation. The
-    # pair set is the smallest frame in the pipeline — always safe to cache.
-    # LAZY (r17, the bpe_train pattern): jaccard_pairs' very next step is
-    # its broadcast-guard pairs.count(), a single-consumer action that
-    # materializes this checkpoint as a side effect — one fewer eager job
-    # submission per pipeline run, value-unchanged.
+    # times (the two pair lists, the copy count) inside one verify plan;
+    # without the cut each read re-executes the LSH candidate generation.
+    # Eager, because a lazy checkpoint first computed by three racing
+    # legs would duplicate that work. The pair set is the smallest frame
+    # in the pipeline — always safe to cache.
     cands = materialize(
         minhash_lsh_candidates(
             df,
@@ -578,7 +550,6 @@ def minhash_dedup(
             checkpoint_dir=checkpoint_dir,
         ),
         checkpoint_dir=checkpoint_dir,
-        eager=False,
     )
     scored = jaccard_pairs(
         df,
@@ -586,7 +557,6 @@ def minhash_dedup(
         id_col=id_col,
         text_col=text_col,
         shingle_words=shingle_words,
-        checkpoint_dir=checkpoint_dir,
     )
     return scored.filter(F.col("jaccard") >= threshold)
 
@@ -647,9 +617,8 @@ def crosscorpus_dedup(
         bands=bands, shingle_words=shingle_words, seed=seed,
         checkpoint_dir=checkpoint_dir, barrier=False,
     ).alias("b")
-    # lazy, like minhash_dedup's candidate barrier (r17): jaccard_pairs'
-    # broadcast-guard count is the single-consumer next action that
-    # materializes it
+    # eager candidate barrier, as in minhash_dedup: jaccard_pairs reads
+    # the pairs three times
     cands = materialize(
         lb.join(
             rb,
@@ -659,12 +628,10 @@ def crosscorpus_dedup(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(),
         checkpoint_dir=checkpoint_dir,
-        eager=False,
     )
     scored = jaccard_pairs(
         left, cands, id_col=id_col, text_col=text_col,
-        shingle_words=shingle_words, checkpoint_dir=checkpoint_dir,
-        df_b=right,
+        shingle_words=shingle_words, df_b=right,
     )
     return scored.filter(F.col("jaccard") >= threshold)
 
@@ -1331,19 +1298,26 @@ def connected_components(
     cluster_id = min node id reachable in the undirected pair graph — the
     step that turns near-dup PAIRS into keep-one-per-cluster decisions.
 
-    Iterative min-label propagation to fixpoint; each round is one join +
-    one aggregate on the (small, pairs-sized) label frontier, lineage cut
-    with localCheckpoint. O(diameter) rounds — near-dup clusters are
-    shallow (dup clusters have tiny diameters), so this converges in a few
-    rounds even on billion-edge pair sets.
+    ``pairs`` is read once, by the materialized undirected edge set (each
+    pair exploded into both directions), so a lazy pair frame such as
+    :func:`minhash_dedup`'s runs once. Labels start at the minimum of a
+    node and its neighbours, then min-label propagation runs to fixpoint;
+    each round is one join + one aggregate on the (small, pairs-sized)
+    label frontier, lineage cut by a checkpoint, plus one convergence
+    check. A component whose every node is at most one hop from its
+    minimum (a star around it, a clique) converges in ONE round; in
+    general O(diameter) rounds — near-dup clusters are shallow, so this
+    converges in a few rounds even on billion-edge pair sets.
     """
+    both = F.array(
+        F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+        F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+    )
     edges = materialize(
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct(),
+        pairs.select(F.explode(both).alias("e")).select("e.*").distinct(),
         checkpoint_dir=checkpoint_dir,
     )
-    labels = edges.select("u").distinct().withColumn("label", F.col("u"))
+    labels = edges.groupBy("u").agg(F.least("u", F.min("v")).alias("label"))
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
@@ -1399,11 +1373,12 @@ def resolve_duplicates(
 
     Scale shape: components run on the pairs graph only (orders of
     magnitude smaller than the corpus); the drop set (cluster members
-    minus representatives) feeds one LEFT ANTI join against the corpus —
-    broadcast while it fits (≤ BROADCAST_IDS_MAX ids; at a heavy dup rate
-    the drop set is corpus-scale and a forced broadcast would OOM the
-    driver), shuffle anti-join beyond. The corpus itself is scanned once
-    and never shuffled in the broadcast regime.
+    minus representatives, a filter over the last label checkpoint)
+    feeds one LEFT ANTI join against the corpus. It carries no join hint
+    and costs no size probe: AQE broadcasts it from its actual size when
+    it fits under ``autoBroadcastJoinThreshold`` and keeps a shuffle
+    anti-join when a heavy dup rate makes it corpus-scale. In the
+    broadcast regime the corpus is scanned once and never shuffled.
     """
     comp = connected_components(
         pairs, src=src, dst=dst, checkpoint_dir=checkpoint_dir
@@ -1411,11 +1386,6 @@ def resolve_duplicates(
     drop = comp.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
-    # the count is cheap: connected_components returns a projection of its
-    # per-iteration checkpoint, so both the count and the anti-join replay
-    # only a filter over materialized labels
-    if drop.count() <= BROADCAST_IDS_MAX:
-        drop = F.broadcast(drop)
     return df.join(drop, id_col, "left_anti")
 
 
@@ -1718,9 +1688,8 @@ def similarity_join(
         shingle_words=shingle_words,
     )
     scored = jaccard_pairs(
-        # lazy candidate barrier: jaccard_pairs' broadcast-guard count is
-        # the single-consumer next action that materializes it (r17)
-        df, materialize(cand, eager=False), id_col=id_col,
+        # eager candidate barrier, as in minhash_dedup
+        df, materialize(cand), id_col=id_col,
         text_col=text_col, shingle_words=shingle_words,
     )
     return scored.filter(F.col("jaccard") >= F.lit(float(threshold)))

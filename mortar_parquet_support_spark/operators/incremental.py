@@ -607,8 +607,8 @@ class MinHashIndex:
         pairs = (
             # hits derives from the (pruned but index-sized) bucket scan;
             # the batch side is the small one — hint it so the planner
-            # never sort-merges the index-derived side (checkpointed-frame
-            # size stats are unreliable, cf. dedup.BROADCAST_IDS_MAX)
+            # never sort-merges the index-derived side (the planner's size
+            # estimate for a checkpointed frame is unreliable)
             F.broadcast(b_banded)
             .join(
                 hits.select("band", "bucket", F.col("id").alias("index_id")),

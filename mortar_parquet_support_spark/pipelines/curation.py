@@ -32,7 +32,6 @@ from mortar_parquet_support_spark.operators.curation import (
     strip_boilerplate_lines,
 )
 from mortar_parquet_support_spark.operators.dedup import (
-    BROADCAST_IDS_MAX,
     minhash_dedup,
     resolve_duplicates,
 )
@@ -136,24 +135,17 @@ def curate(
     cur = out.withColumn("__reason", reason)
 
     if eval_df is not None:
-        # materialize BEFORE the broadcast-size probe: without the
-        # barrier, bad.count() runs the full shingle-explode + semi-join
-        # once and the join below runs it again from scratch (the
-        # resolve_duplicates precedent this copies counts a checkpointed
-        # frame)
-        bad = materialize(
-            contaminated_ids(
-                cur.filter(F.col("__reason").isNull()),
-                eval_df,
-                id_col=id_col,
-                text_col=text_col,
-                eval_text_col=eval_text_col,
-                ngram_words=contamination_ngram_words,
-            ).withColumn("__contaminated", F.lit(True)),
-            checkpoint_dir=checkpoint_dir,
-        )
-        if bad.count() <= BROADCAST_IDS_MAX:  # id list: broadcast while small
-            bad = F.broadcast(bad)
+        # the contaminated id list has this one consumer and no join
+        # hint: it is a shuffle output, so AQE broadcasts it from its
+        # actual size while it fits and keeps a shuffle join when not
+        bad = contaminated_ids(
+            cur.filter(F.col("__reason").isNull()),
+            eval_df,
+            id_col=id_col,
+            text_col=text_col,
+            eval_text_col=eval_text_col,
+            ngram_words=contamination_ngram_words,
+        ).withColumn("__contaminated", F.lit(True))
         cur = cur.join(bad, id_col, "left").withColumn(
             "__reason",
             F.coalesce(
@@ -189,15 +181,13 @@ def curate(
             ),
         )
     elif dedup == "minhash":
-        # materialized: FOUR consumers (LSH signature build, the jaccard
-        # shingle semi-join, resolve_duplicates' anti-join, and the
-        # survivors' role in `kept`) would each replay the boilerplate
-        # shuffles + scoring regexes + contamination join from scratch —
-        # the same double-execution hazard the `bad` barrier above cites
-        survivors = materialize(
-            cur.filter(F.col("__reason").isNull()),
-            checkpoint_dir=checkpoint_dir,
-        )
+        # the ONE barrier of this branch: the labelled frame feeds the LSH
+        # signature build, the jaccard shingle fan-out, resolve_duplicates'
+        # anti-join and the final label join, and each would otherwise
+        # replay the scan, boilerplate shuffles, scoring regexes and
+        # contamination join from scratch
+        cur = materialize(cur, checkpoint_dir=checkpoint_dir)
+        survivors = cur.filter(F.col("__reason").isNull())
         pairs = minhash_dedup(
             survivors,
             id_col=id_col,

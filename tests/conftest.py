@@ -26,6 +26,22 @@ def plan_str(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def jobs_during(spark, action) -> int:
+    """Spark jobs ``action`` submits, counted through a job group (a count
+    of the status store's job list saturates at its retention limit)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget probe")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def scan_meta(plan: str, key: str) -> str | None:
     """Content of a FileScan metadata section (e.g. 'PartitionFilters',
     'PushedFilters'). Spark truncates long lists with '...' and NO closing

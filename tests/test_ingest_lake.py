@@ -11,7 +11,7 @@ from mortar_parquet_support_spark.sources.ingest import (
     ingest_directory,
 )
 from mortar_parquet_support_spark.sources.lake import TimeseriesLake, write_metadata_summary
-from tests.conftest import make_stream_csv
+from tests.conftest import jobs_during, make_stream_csv
 
 U1 = "a0dd74ce-05ee-5fee-8335-2d9856bd52be"
 U2 = "f3b61918-afa9-596d-bef5-40fe1e96454f"
@@ -208,22 +208,6 @@ def test_data_uuids_large_id_set_uses_semi_join(spark, lake_dir, monkeypatch):
     assert large.count() == 5
 
 
-def _jobs_during(spark, action) -> int:
-    """Spark jobs ``action`` submits, counted through a job group (a count
-    of the status store's job list saturates at its retention limit)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget probe")
-    try:
-        action()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_sparql_bridge_submits_no_spark_jobs(spark, lake_dir):
     """Job budget: once the graph index is built, a basic-graph-pattern
     query and the composite bridge in front of the lake scan run on the
@@ -257,16 +241,16 @@ b:sp a brick:Zone_Air_Temperature_Setpoint ;
         }"""
     # warm-up: collects the triples and builds the site indexes
     assert len(c.sparql(_QUERY1, sites=["bldg1", "bldg2"]).collect()) == 2
-    assert _jobs_during(spark, lambda: spark.range(3).count()) >= 1  # the probe counts
+    assert jobs_during(spark, lambda: spark.range(3).count()) >= 1  # the probe counts
 
     rows = []
-    assert _jobs_during(
+    assert jobs_during(
         spark, lambda: rows.extend(c.sparql(_QUERY1, sites=["bldg1"]).collect())
     ) == 0
     assert [(r.sen, r.sp, r.site) for r in rows] == [(U1, U2, "bldg1")]
     frames = []
     for sites in (["bldg1"], ["bldg1", "bldg2"]):  # one site, and site by site
-        assert _jobs_during(
+        assert jobs_during(
             spark, lambda: frames.append(c.data_sparql_df(point, sites=sites))
         ) == 0
     assert [f.count() for f in frames] == [3, 3]  # U1's rows
