@@ -592,9 +592,9 @@ def _train_classifier(spark, sf_dir):
 @_register("tokenize_and_pack")
 def _tokenize_and_pack(spark, sf_dir):
     """End-to-end tokenize-and-pack (pipelines/tokenize.py): BPE merges
-    trained on the documents corpus, every doc encoded to its EXACT token
-    cost under that vocabulary, then packed into 512-token bins
-    (sharded running sums). Rows-only (the trained merges are a model;
+    trained on the documents corpus, every doc costed at its EXACT token
+    count under that vocabulary in one Arrow pass (counts, not token
+    arrays), then packed into 512-token bins (sharded running sums). Rows-only (the trained merges are a model;
     each composed stage is independently pinned — bpe train/encode vs a
     python reference, pack_sequences vs its DuckDB oracle); the
     composition contract (bin budgets respected, every in-budget doc

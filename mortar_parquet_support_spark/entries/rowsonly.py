@@ -217,7 +217,7 @@ def _training_batches(spark, sf_dir):
         audit=True,
     )
     # THREE consumers replay the curate lineage (BPE's word table, the
-    # exact-cost encode leg, the final accounting join) — one barrier,
+    # exact-cost counting pass, the final accounting join) — one barrier,
     # ~3s/evaluation saved twice at sf0.1 (r17)
     from mortar_parquet_support_spark.functions import materialize
 

@@ -33,6 +33,8 @@ encode(merges) segments exactly like sequential merge application
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,24 +188,42 @@ def _encoder(merges: list[tuple[str, str]]):
     return encode_word
 
 
+_WORDS = re.compile(r"\s+", re.ASCII)
+
+
+def _token_counter(merges: list[tuple[str, str]]):
+    """text -> encoded length under ``merges``: the sum of ``len(enc(w))``
+    over the words :func:`bpe_encode` emits (same lower-casing, same
+    ASCII-only ``\\s+`` split, empty words skipped), so it equals
+    ``len(bpe_encode(text))`` without building the token list. NULL
+    text counts 0."""
+    enc = _encoder(merges)
+
+    def count(text: "str | None") -> int:
+        if text is None:
+            return 0
+        return sum(len(enc(w)) for w in _WORDS.split(text.lower()) if w)
+
+    return count
+
+
 def bpe_encode(
     text: Column, merges: list[tuple[str, str]]
 ) -> Column:
-    """array<string> of BPE tokens for a text column: whitespace
-    pre-tokenization matching training's ``split(lower(text), '\\s+')``
-    EXACTLY — Java's ``\\s`` is ASCII-only, so the Python split here uses
-    ``re.ASCII`` (a bare ``str.split()`` would split on NBSP/U+2009 etc.
-    and serve a different word stream than the vocabulary was trained
-    on) — then per-word greedy merge-rank encoding. Arrow-batched pandas
-    UDF — the ranks table is the closure-shipped model."""
-    import re
-
+    """array<string> of BPE tokens for a text column (NULL for NULL
+    text): whitespace pre-tokenization matching training's
+    ``split(lower(text), '\\s+')`` EXACTLY — Java's ``\\s`` is
+    ASCII-only, so the Python split here uses ``re.ASCII`` (a bare
+    ``str.split()`` would split on NBSP/U+2009 etc. and serve a different
+    word stream than the vocabulary was trained on) — then per-word
+    greedy merge-rank encoding. Arrow-batched pandas UDF — the ranks
+    table is the closure-shipped model. To cost documents, use
+    :func:`bpe_token_count_exact`, which returns counts, not arrays."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 
     enc = _encoder(merges)
-    ws = re.compile(r"\s+", re.ASCII)
 
     @pandas_udf(ArrayType(StringType()))
     def run(texts):
@@ -213,7 +233,7 @@ def bpe_encode(
                 out.append(None)
                 continue
             toks: list[str] = []
-            for w in ws.split(t.lower()):
+            for w in _WORDS.split(t.lower()):
                 if w:
                     toks.extend(enc(w))
             out.append(toks)
@@ -225,6 +245,27 @@ def bpe_encode(
 def bpe_token_count_exact(
     text: Column, merges: list[tuple[str, str]]
 ) -> Column:
-    """Exact encoded length under the trained vocabulary — the precise
-    counterpart of text.bpe_token_count's regex estimate."""
-    return F.size(bpe_encode(text, merges))
+    """Exact encoded length under the trained vocabulary (a ``long``;
+    NULL for NULL text, like ``size(bpe_encode(text))``) — the precise
+    counterpart of text.bpe_token_count's regex estimate. One pandas UDF
+    over the counting kernel: token arrays never cross the Arrow
+    boundary.
+
+    Pushdown pitfall: a filter on this column (``n <= budget``) is
+    pushed below the projection that computes it and re-runs the UDF
+    there, so the Python worker encodes every document twice. To filter
+    on the count, compute it behind an opaque node the filter cannot
+    cross (``mapInArrow``, as pipelines.tokenize.tokenize_and_pack
+    does) or materialize first."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    count = _token_counter(merges)
+
+    @pandas_udf("long")
+    def run(texts):
+        return pd.Series(
+            [None if t is None else count(t) for t in texts], dtype="Int64"
+        )
+
+    return run(text)

@@ -206,7 +206,12 @@ def pca_transform(
     """Project ``vec_col`` onto the fitted axes: adds ``out_col`` =
     (x - mean) @ components.T as array<double> length k. Zero-shuffle
     Arrow-batched matmul; degenerate vectors (NULL, wrong length,
-    non-finite elements) map to NULL, the row itself is kept."""
+    non-finite elements) map to NULL, the row itself is kept.
+
+    ``out_col`` is a pandas-UDF column: a filter on it (say
+    ``pca IS NOT NULL``) is pushed below the projection and re-runs the
+    UDF, evaluating every vector twice; materialize first when the
+    output is filtered."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -32,8 +32,8 @@ from mortar_parquet_support_spark.operators.curation import (
     strip_boilerplate_lines,
 )
 from mortar_parquet_support_spark.operators.dedup import (
+    connected_components,
     minhash_dedup,
-    resolve_duplicates,
 )
 from mortar_parquet_support_spark.operators.text import (
     fingerprint,
@@ -182,10 +182,10 @@ def curate(
         )
     elif dedup == "minhash":
         # the ONE barrier of this branch: the labelled frame feeds the LSH
-        # signature build, the jaccard shingle fan-out, resolve_duplicates'
-        # anti-join and the final label join, and each would otherwise
-        # replay the scan, boilerplate shuffles, scoring regexes and
-        # contamination join from scratch
+        # signature build, the jaccard shingle fan-out and the final
+        # label join, and each would otherwise replay the scan,
+        # boilerplate shuffles, scoring regexes and contamination join
+        # from scratch
         cur = materialize(cur, checkpoint_dir=checkpoint_dir)
         survivors = cur.filter(F.col("__reason").isNull())
         pairs = minhash_dedup(
@@ -196,16 +196,21 @@ def curate(
             seed=seed,
             checkpoint_dir=checkpoint_dir,
         )
-        kept = resolve_duplicates(
-            survivors, pairs, id_col=id_col, checkpoint_dir=checkpoint_dir
-        ).select(F.col(id_col), F.lit(True).alias("__kept_nd"))
-        cur = cur.join(kept, id_col, "left").withColumn(
+        # every non-representative cluster member is a survivor (pairs
+        # come from survivors, ids are unique), so ONE left join of the
+        # drop set labels them — no anti-join of survivors first
+        drop = connected_components(
+            pairs, checkpoint_dir=checkpoint_dir
+        ).filter(F.col("id") != F.col("cluster_id")).select(
+            F.col("id").alias(id_col), F.lit(True).alias("__near_dup")
+        )
+        cur = cur.join(drop, id_col, "left").withColumn(
             "__reason",
             F.coalesce(
                 F.col("__reason"),
-                F.when(F.col("__kept_nd").isNull(), F.lit("near_duplicate")),
+                F.when(F.col("__near_dup"), F.lit("near_duplicate")),
             ),
-        ).drop("__kept_nd")
+        ).drop("__near_dup")
 
     audited = cur.withColumn(
         "kept", F.col("__reason").isNull()

@@ -4,8 +4,10 @@ vocabulary, end to end on the engine:
 
 1. train BPE merges on the corpus word-frequency table
    (operators/bpe.bpe_train — the loop never touches raw text twice),
-2. encode every document with the learned merges (Arrow-batched,
-   closure-shipped ranks model) and measure its EXACT token cost,
+2. cost every document in ONE Python pass: a ``mapInArrow`` over
+   (id, text) returns each document's EXACT encoded length under the
+   learned merges (closure-shipped ranks model) — counts, never token
+   arrays, cross the Arrow boundary,
 3. pack documents into fixed-budget bins (operators/curation.
    pack_sequences — sharded running sums, no global window).
 
@@ -38,9 +40,19 @@ def tokenize_and_pack(
     merges are trained on ``df`` itself. Documents whose exact encoded
     length exceeds ``budget`` are dropped with the same loud contract
     pack_sequences applies (an over-budget row can never fit any bin);
-    empty/NULL docs cost 0 tokens and pack normally."""
+    empty/NULL docs cost 0 tokens and pack normally.
+
+    Costing is one ``mapInArrow`` over ``(id_col, text_col)`` that
+    returns ``(id_col, n_tokens)``, the id type passing through
+    unchanged. The budget filter and the packing window sit above that
+    opaque node, so the plan holds exactly one Python evaluation and
+    each document is encoded once (a filter on a Python-UDF column
+    would be pushed below its projection and re-run the UDF)."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from mortar_parquet_support_spark.operators.bpe import (
-        bpe_token_count_exact,
+        _token_counter,
         bpe_train,
     )
     from mortar_parquet_support_spark.operators.curation import pack_sequences
@@ -49,11 +61,20 @@ def tokenize_and_pack(
         merges = bpe_train(
             df, text_col=text_col, num_merges=vocab_merges
         )
-    costed = df.select(
-        F.col(id_col),
-        F.coalesce(
-            bpe_token_count_exact(F.col(text_col), merges), F.lit(0)
-        ).cast("long").alias("n_tokens"),
+    count = _token_counter(merges)
+
+    def cost(batches):
+        for b in batches:
+            n = pa.array([count(t) for t in b.column(1).to_pylist()], pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), n], names=[id_col, "n_tokens"]
+            )
+
+    costed = df.select(id_col, text_col).mapInArrow(
+        cost,
+        StructType(
+            [df.schema[id_col], StructField("n_tokens", LongType(), False)]
+        ),
     )
     packed = pack_sequences(
         costed.filter(F.col("n_tokens") <= budget),

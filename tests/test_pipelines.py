@@ -314,3 +314,103 @@ def test_training_batches_over_budget_label(spark):
     got = {r.doc_id: (r.kept, r.drop_reason) for r in out.collect()}
     assert got[1] == (True, None)
     assert got[2] == (False, "over_budget")
+
+
+def test_tokenize_and_pack_one_python_pass(spark):
+    """The pack plan evaluates Python once: the budget filter sits above
+    the costing node instead of being pushed below it with a second copy
+    of the encoder."""
+    from tests.conftest import plan_str
+
+    from mortar_parquet_support_spark.pipelines.tokenize import tokenize_and_pack
+
+    df = spark.createDataFrame(
+        [(i, "low lower lowest " * (i + 1)) for i in range(8)],
+        "doc_id long, text string",
+    )
+    plan = plan_str(
+        tokenize_and_pack(df, budget=16, shards=2, merges=[("l", "o")])
+    )
+    nodes = sum(
+        plan.count(n) for n in ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+    )
+    assert nodes == 1, plan
+
+
+def _ref_cost(text, merges):
+    """Encoded length by the plain definition: Java's ASCII ``\\s`` class
+    spelled out, one _encoder call per word."""
+    import re
+
+    from mortar_parquet_support_spark.operators.bpe import _encoder
+
+    if text is None:
+        return 0
+    enc = _encoder(merges)
+    return sum(
+        len(enc(w)) for w in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if w
+    )
+
+
+def test_tokenize_and_pack_costs_match_reference(spark):
+    """Per-doc n_tokens == the pure-Python reference on segmentation edge
+    cases; a doc exactly at the budget packs, one token over is dropped;
+    string ids pass through; bpe_token_count_exact == size(bpe_encode)."""
+    from mortar_parquet_support_spark.operators.bpe import (
+        bpe_encode,
+        bpe_token_count_exact,
+    )
+    from mortar_parquet_support_spark.pipelines.tokenize import tokenize_and_pack
+
+    merges = [("l", "o"), ("lo", "w"), ("e", "r"), ("é", "c"), ("a", "b")]
+    at_budget = "lower lowest low " * 5
+    budget = _ref_cost(at_budget, merges)
+    texts = {
+        1: None,
+        2: "",
+        3: " \t\n\r\x0b\f ",
+        4: "\tlow lower",
+        5: "low\u00a0lower\u2009lowest",  # NBSP / thin space: one word
+        6: "ÉCOLE ÜBER ÄRGER LÖWE",
+        7: "ab" * 2500,
+        8: at_budget,
+        9: at_budget + " x",               # one token over the budget
+    }
+    want = {i: _ref_cost(t, merges) for i, t in texts.items()}
+    # the two separators stay tokens inside one word
+    assert want[5] == _ref_cost("low lower lowest", merges) + 2
+    assert want[9] == budget + 1
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+
+    unbounded = {
+        r.doc_id: r.n_tokens
+        for r in tokenize_and_pack(
+            df, budget=10**6, shards=2, merges=merges
+        ).collect()
+    }
+    assert unbounded == want
+
+    packed = {
+        r.doc_id
+        for r in tokenize_and_pack(df, budget=budget, shards=2, merges=merges).collect()
+    }
+    # zero-cost docs (1-3) and the at-budget doc (8) pack
+    assert packed == set(texts) - {7, 9}
+
+    by_str = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in texts.items()], "doc_id string, text string"
+    )
+    out = tokenize_and_pack(by_str, budget=10**6, shards=2, merges=merges)
+    assert out.schema["doc_id"].dataType.simpleString() == "string"
+    assert {r.doc_id: r.n_tokens for r in out.collect()} == {
+        f"d{i}": n for i, n in want.items()
+    }
+
+    rows = df.select(
+        "doc_id",
+        bpe_token_count_exact(F.col("text"), merges).alias("n"),
+        F.size(bpe_encode(F.col("text"), merges)).alias("size"),
+    ).collect()
+    for r in rows:
+        assert r.n == r.size, r
+        assert (r.n if r.n is not None else 0) == want[r.doc_id]
