@@ -7,47 +7,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def materialize(df, *, checkpoint_dir: str | None = None, eager: bool = True):
+def materialize(df, *, eager: bool = True):
     """Eager materialization barrier for iterative pipelines (lineage cut +
     AQE double-execution guard — rationale in operators/dedup.py's
     minhash_lsh_candidates docstring).
 
-    Storage tier:
-    - ``checkpoint_dir`` given: set it on the context and use a RELIABLE
-      ``checkpoint()`` — survives executor loss, the right choice on a real
-      cluster where a lost executor would otherwise recompute the whole
-      upstream pipeline mid-iteration.
-    - a checkpoint dir is already configured on the SparkContext: reliable
-      ``checkpoint()`` there.
-    - otherwise: ``localCheckpoint()`` (executor-local blocks) — fastest,
-      fine for local mode and for clusters that accept recompute-on-loss.
-
-    ``eager=False`` cuts the lineage NOW but defers the checkpoint's
-    materialization to the frame's FIRST action. On the
-    ``localCheckpoint`` tier, for loops whose next step is itself an
-    action over the new frame (bpe_train's top-pair job), that action
-    materializes the checkpoint as a side effect and the separate eager
-    barrier job disappears (r17). That saving is specific to this tier: a
-    reliable ``checkpoint()`` is written by a separate job after the
-    first action (Spark's ReliableRDDCheckpointData), which runs the
-    lineage a second time — values are unchanged, the work is not. Only
-    for callers whose next action consumes the frame exactly once before
-    any multi-leg self-join: two legs racing to compute an unmaterialized
-    lazy checkpoint can transiently duplicate partition work.
+    The tier is session state: with a checkpoint dir set on the
+    SparkContext the barrier is a reliable, always-eager ``checkpoint()``;
+    otherwise it is ``localCheckpoint(eager)``.
+    ``eager=False`` defers the local checkpoint's write to the frame's
+    first action, which saves a job only on that tier — a lazy reliable
+    checkpoint is written by a second job that re-runs the lineage.
     """
-    sc = df.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        # compare against the dir we LAST SET, not getCheckpointDir():
-        # setCheckpointDir appends a random UUID subdirectory (and may
-        # scheme-qualify the path), so the getter never equals the raw
-        # argument and the guard would reset — one fs.mkdirs round-trip
-        # and a fresh scatter directory — on EVERY materialize call
-        if getattr(sc, "_mortar_ckpt_dir", None) != checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
-            sc._mortar_ckpt_dir = checkpoint_dir
-        return df.checkpoint(eager=eager)
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
 
 

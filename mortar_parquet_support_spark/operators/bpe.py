@@ -88,7 +88,6 @@ def bpe_train(
     text_col: str = "text",
     num_merges: int = 50,
     min_freq: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` byte-pair merges from the corpus (see module
     docstring for the scale shape). Stops early when the best remaining
@@ -96,10 +95,9 @@ def bpe_train(
     merge list — the tokenizer model for :func:`bpe_encode` /
     :func:`bpe_token_count_exact`.
 
-    Pass ``checkpoint_dir`` on a real cluster: the per-iteration barrier
-    then uses RELIABLE checkpoints (functions.materialize), so an
-    executor loss mid-loop can't destroy the word table — the same
-    tiering every other iterative operator offers. Default local
+    On a real cluster set a session checkpoint dir: the per-iteration
+    barrier then uses RELIABLE checkpoints (functions.materialize), so an
+    executor loss mid-loop can't destroy the word table. Default local
     checkpoints are fine locally; their blocks free at GC."""
     from mortar_parquet_support_spark.functions import materialize
     from mortar_parquet_support_spark.operators.text import unigram_counts
@@ -107,15 +105,16 @@ def bpe_train(
     words = unigram_counts(df, text_col=text_col).select(
         F.col("freq"), _chars(F.col("token")).alias("syms")
     )
-    # LAZY checkpoints throughout the loop (r17): each iteration's next
-    # action is the top-pair job below, which materializes the pending
+    # LAZY checkpoints throughout the loop on the localCheckpoint tier
+    # (the reliable tier is always eager): each iteration's next action
+    # is the top-pair job below, which materializes the pending
     # checkpoint as a side effect — one action per merge instead of two
     # (an eager barrier job + the top-pair job). The lineage cut is
     # unchanged (checkpoint marks the plan immediately); the rewrite
     # stage then reads the blocks the top-pair job just wrote. Safe here
     # because the top-pair aggregate consumes the frame exactly once —
     # no self-join legs can race the first materialization.
-    words = materialize(words, checkpoint_dir=checkpoint_dir, eager=False)
+    words = materialize(words, eager=False)
 
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
@@ -147,12 +146,12 @@ def bpe_train(
         # fold + union per merge and the final iterations would re-run
         # the whole history. Dropping the previous iteration's reference
         # lets its blocks free at GC (local tier) — reliable-checkpoint
-        # files (checkpoint_dir tier) are cleaned with the dir. Lazy:
+        # files are cleaned with the session dir. Lazy on the local tier:
         # the NEXT iteration's top-pair job materializes it (see above);
         # when the loop exits first (early stop or the last merge), the
         # pending checkpoint is simply never paid — its frame is never
         # read again.
-        words = materialize(rewritten, checkpoint_dir=checkpoint_dir, eager=False)
+        words = materialize(rewritten, eager=False)
     return merges
 
 

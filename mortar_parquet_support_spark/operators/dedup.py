@@ -194,7 +194,6 @@ def _banded_frame(
     bands: int,
     shingle_words: int,
     seed: int,
-    checkpoint_dir: str | None,
     barrier: bool = True,
 ) -> DataFrame:
     """(id, band, bucket) LSH frame: minhash signatures folded into
@@ -229,7 +228,7 @@ def _banded_frame(
     )
     if not barrier:
         return banded
-    return materialize(banded, checkpoint_dir=checkpoint_dir)
+    return materialize(banded)
 
 
 def band_hashes(*, num_perm: int, bands: int, seed: int) -> list[Column]:
@@ -274,7 +273,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_words: int = 3,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH: docs sharing any band of
     their minhash signature. Returns (id_a, id_b) with id_a < id_b.
@@ -293,9 +291,9 @@ def minhash_lsh_candidates(
     2-20× slowdowns (measured), while a checkpoint is a hard barrier with
     stable cost. The frame is num_perm longs/doc (~0.5 KB) — orders of
     magnitude smaller than the corpus, safe to materialize even at 100 TB.
-    Pass ``checkpoint_dir`` (or preconfigure ``sc.setCheckpointDir``) to
-    upgrade every barrier to a reliable ``checkpoint()`` on shared storage
-    — the right mode on a real cluster (functions.materialize).
+    A checkpoint dir set on the SparkContext makes every barrier a
+    reliable ``checkpoint()`` on shared storage — the right mode on a
+    real cluster (functions.materialize).
     """
     banded = _banded_frame(
         df,
@@ -305,7 +303,6 @@ def minhash_lsh_candidates(
         bands=bands,
         shingle_words=shingle_words,
         seed=seed,
-        checkpoint_dir=checkpoint_dir,
     )
     left = banded.alias("a")
     right = banded.alias("b")
@@ -512,7 +509,6 @@ def minhash_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full fuzzy-dedup pipeline: LSH candidates -> exact-Jaccard verify ->
     pairs >= threshold. The returned pair list feeds connected-components /
@@ -547,9 +543,7 @@ def minhash_dedup(
             bands=bands,
             shingle_words=shingle_words,
             seed=seed,
-            checkpoint_dir=checkpoint_dir,
         ),
-        checkpoint_dir=checkpoint_dir,
     )
     scored = jaccard_pairs(
         df,
@@ -572,7 +566,6 @@ def crosscorpus_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs BETWEEN two corpora — the incremental-crawl /
     contamination shape: score a NEW batch (``left``) against an EXISTING
@@ -609,13 +602,11 @@ def crosscorpus_dedup(
     # first.
     lb = _banded_frame(
         left, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        bands=bands, shingle_words=shingle_words, seed=seed,
-        checkpoint_dir=checkpoint_dir, barrier=False,
+        bands=bands, shingle_words=shingle_words, seed=seed, barrier=False,
     ).alias("a")
     rb = _banded_frame(
         right, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        bands=bands, shingle_words=shingle_words, seed=seed,
-        checkpoint_dir=checkpoint_dir, barrier=False,
+        bands=bands, shingle_words=shingle_words, seed=seed, barrier=False,
     ).alias("b")
     # eager candidate barrier, as in minhash_dedup: jaccard_pairs reads
     # the pairs three times
@@ -627,7 +618,6 @@ def crosscorpus_dedup(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(),
-        checkpoint_dir=checkpoint_dir,
     )
     scored = jaccard_pairs(
         left, cands, id_col=id_col, text_col=text_col,
@@ -738,7 +728,6 @@ def fingerprint_band_pairs(
     id_col: str,
     fp_col: str,
     band_bits: int = 16,
-    checkpoint_dir: str | None = None,
     skip_barrier: bool = False,
 ) -> DataFrame:
     """Hamming-band LSH over ANY 64-bit fingerprint column: split the
@@ -775,7 +764,7 @@ def fingerprint_band_pairs(
     # BroadcastExchange cannot reuse the other side's exchange — without
     # the cut the upstream fingerprint computation runs TWICE
     if not skip_barrier:
-        banded = materialize(banded, checkpoint_dir=checkpoint_dir)
+        banded = materialize(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -801,7 +790,6 @@ def simhash_dedup(
     text_col: str,
     band_bits: int = 16,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup candidates by SimHash banding: split the 64-bit fingerprint
     into 64/band_bits bands; docs sharing any band are candidates (with
@@ -870,7 +858,6 @@ def simhash_dedup(
         id_col="id",
         fp_col="fp",
         band_bits=band_bits,
-        checkpoint_dir=checkpoint_dir,
     ).select(
         "id_a",
         "id_b",
@@ -887,7 +874,6 @@ def embedding_dedup(
     threshold: float = 0.95,
     n_planes: int = 8,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
     block_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: random-hyperplane LSH bucket (n_planes sign
@@ -920,7 +906,6 @@ def embedding_dedup(
             id_col=id_col,
             vec_col=vec_col,
             threshold=threshold,
-            checkpoint_dir=checkpoint_dir,
             block_rows=block_rows,
         )
     dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
@@ -964,7 +949,7 @@ def embedding_dedup(
     # simhash_dedup): the n_planes-fold hyperplane aggregate is the
     # expensive expression, and an AQE broadcast of one leg would
     # recompute it over the whole corpus for the other
-    keyed = materialize(keyed, checkpoint_dir=checkpoint_dir)
+    keyed = materialize(keyed)
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
         b,
@@ -985,7 +970,6 @@ def _embedding_dedup_exact(
     id_col: str,
     vec_col: str,
     threshold: float,
-    checkpoint_dir: str | None,
     block_rows: int | None,
 ) -> DataFrame:
     """All-pairs cosine scoring, block-parallel and Arrow-vectorized —
@@ -1040,7 +1024,6 @@ def _embedding_dedup_exact(
     return _blocked_cosine_pairs(
         rows,
         threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
         block_rows=block_rows,
     )
 
@@ -1049,7 +1032,6 @@ def _blocked_cosine_pairs(
     rows: DataFrame,
     *,
     threshold: float,
-    checkpoint_dir: str | None,
     block_rows: int | None,
     bucket: bool = False,
 ) -> DataFrame:
@@ -1063,10 +1045,11 @@ def _blocked_cosine_pairs(
     small-cell corpora degrade to one block per bucket (the plain
     bucket equi-join shape) instead of a global fan-out."""
     # barrier: the frame feeds the stats action below plus both join
-    # legs. LAZY (r17 review): the stats aggregate is the single-consumer
-    # first action — it materializes the checkpoint, and the join legs
-    # then read blocks; an eager barrier would be one redundant job.
-    rows = materialize(rows, checkpoint_dir=checkpoint_dir, eager=False)
+    # legs. LAZY on the localCheckpoint tier: the stats aggregate is the
+    # single-consumer first action — it materializes the checkpoint, and
+    # the join legs then read blocks; an eager barrier would be one
+    # redundant job. The reliable tier is always eager.
+    rows = materialize(rows, eager=False)
     # blocking statistics come from the LARGEST bucket, not the global
     # row count (r17 review): quadratic work is per bucket, so a global
     # n_blocks would make every row of a many-small-cells corpus fan out
@@ -1199,7 +1182,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     iters: int = 2,
     seed: int = 42,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-pruned near-dup pairs (Abbas et al. 2023,
     arXiv:2303.09540): k-means the embedding space, then compare pairs only
@@ -1277,7 +1259,6 @@ def semantic_dedup(
     pairs = _blocked_cosine_pairs(
         rows,
         threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
         block_rows=None,
         bucket=True,
     )
@@ -1292,7 +1273,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster duplicate pairs into components: (id, cluster_id) where
     cluster_id = min node id reachable in the undirected pair graph — the
@@ -1315,7 +1295,6 @@ def connected_components(
     )
     edges = materialize(
         pairs.select(F.explode(both).alias("e")).select("e.*").distinct(),
-        checkpoint_dir=checkpoint_dir,
     )
     labels = edges.groupBy("u").agg(F.least("u", F.min("v")).alias("label"))
     for _ in range(max_iterations):
@@ -1338,7 +1317,7 @@ def connected_components(
                 F.col("label").alias("__old"),
             )
         )
-        new_labels = materialize(new_labels, checkpoint_dir=checkpoint_dir)
+        new_labels = materialize(new_labels)
         converged = new_labels.filter(
             F.col("label") != F.col("__old")
         ).isEmpty()
@@ -1364,7 +1343,6 @@ def resolve_duplicates(
     id_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end dedup resolution: cluster the duplicate ``pairs``
     (connected components), keep each cluster's min-id member, and return
@@ -1380,9 +1358,7 @@ def resolve_duplicates(
     anti-join when a heavy dup rate makes it corpus-scale. In the
     broadcast regime the corpus is scanned once and never shuffled.
     """
-    comp = connected_components(
-        pairs, src=src, dst=dst, checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(pairs, src=src, dst=dst)
     drop = comp.filter(F.col("id") != F.col("cluster_id")).select(
         F.col("id").alias(id_col)
     )
@@ -1396,7 +1372,6 @@ def duplicate_spans(
     text_col: str = "text",
     k: int = 8,
     min_count: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better", §4.1):
@@ -1428,8 +1403,8 @@ def duplicate_spans(
     it is cut with an eager checkpoint barrier — the same guard
     minhash/simhash use above: when the dup set broadcasts there is no
     exchange to reuse and the corpus-wide tokenize+hash scan would run
-    twice. The cut stores (id, i, h) ≈ 24 B/token; pass
-    ``checkpoint_dir`` on a real cluster for a reliable checkpoint
+    twice. The cut stores (id, i, h) ≈ 24 B/token; on a real cluster a
+    session checkpoint dir makes it a reliable checkpoint
     (functions.materialize). NULL-text and shorter-than-k documents
     never participate and produce no rows.
     """
@@ -1455,7 +1430,7 @@ def duplicate_spans(
             )
         ).alias("i", "h"),
     )
-    grams = materialize(grams, checkpoint_dir=checkpoint_dir)
+    grams = materialize(grams)
     dup = (
         grams.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1546,7 +1521,6 @@ def dedup_lines(
     min_count: int = 2,
     delimiter: str = "\n",
     normalize: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """C4-style corpus-level line deduplication (Raffel et al. 2020 §2.2
     discarded repeated three-sentence spans; its modern descendants —
@@ -1573,10 +1547,10 @@ def dedup_lines(
     small side back onto the docs. The line-hash frame feeds two
     consumers (count aggregate + position join), so it is cut with an
     eager checkpoint barrier — ≈ 28 B per non-empty line, far smaller
-    than the corpus; pass ``checkpoint_dir`` on a real cluster
-    (functions.materialize). The docs themselves are scanned twice (hash
-    extraction + rebuild) — two parquet scans, never a corpus shuffle or
-    a corpus-width cut.
+    than the corpus; on a real cluster a session checkpoint dir makes it
+    reliable (functions.materialize). The docs themselves are scanned
+    twice (hash extraction + rebuild) — two parquet scans, never a corpus
+    shuffle or a corpus-width cut.
     """
     if min_count < 2:
         raise ValueError(
@@ -1603,7 +1577,7 @@ def dedup_lines(
     hashed = ex.filter(F.col("_line").rlike(r"\S")).select(
         id_col, "_pos", md5_int(norm).alias("_h")
     )
-    hashed = materialize(hashed, checkpoint_dir=checkpoint_dir)
+    hashed = materialize(hashed)
     dup = (
         hashed.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_c"))

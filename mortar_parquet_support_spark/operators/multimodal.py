@@ -408,7 +408,6 @@ def image_dedup(
     content_col: str = "content",
     band_bits: int = 8,
     max_distance: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Perceptual near-duplicate image pairs: pHash fingerprints ->
     hamming-band LSH candidates (dedup.fingerprint_band_pairs — the
@@ -453,7 +452,6 @@ def image_dedup(
         id_col=id_col,
         fp_col="phash",
         band_bits=band_bits,
-        checkpoint_dir=checkpoint_dir,
     )
     hamming = F.bit_count(
         F.col("fp_a").bitwiseXOR(F.col("fp_b"))

@@ -716,7 +716,6 @@ def train_linear_classifier(
     iters: int = 20,
     lr: float = 1.0,
     l2: float = 0.0,
-    checkpoint_dir: "str | None" = None,
 ):
     """Distributed full-batch logistic training for the fastText-style
     hashed classifier — the TRAINING half of
@@ -740,7 +739,7 @@ def train_linear_classifier(
     3. update ``w -= lr * (grad/n + l2*w)`` as a full-outer join of two
        model-sized frames (the corpus is NOT re-read — the feature table
        is materialized once up front), re-materialized each iteration to
-       cut lineage (the LSH/closure discipline; ``checkpoint_dir``
+       cut lineage (the LSH/closure discipline; a session checkpoint dir
        upgrades to reliable checkpoints on real clusters).
 
     The model never collects to the driver (only the scalar bias
@@ -771,7 +770,7 @@ def train_linear_classifier(
             "__f"
         ),
     ).withColumn("__m", F.size("__f"))
-    docs = materialize(docs, checkpoint_dir=checkpoint_dir)
+    docs = materialize(docs)
     n_docs = docs.count()
     if n_docs == 0:
         raise ValueError("train_linear_classifier: empty training frame")
@@ -782,7 +781,6 @@ def train_linear_classifier(
             (F.lit(1.0) / F.col("__m")).alias("__inv_m"),
             F.explode("__f").alias("__fid"),
         ),
-        checkpoint_dir=checkpoint_dir,
     )
     labels = docs.select("__id", "__y", "__m")
 
@@ -814,7 +812,6 @@ def train_linear_classifier(
                     - F.col("__y")
                 ).alias("__r"),
             ),
-            checkpoint_dir=checkpoint_dir,
         )
         grads = (
             feats.join(resid, "__id")
@@ -836,7 +833,6 @@ def train_linear_classifier(
                     )
                 ).alias("__w"),
             ),
-            checkpoint_dir=checkpoint_dir,
         )
     return (
         weights.select(

@@ -1416,7 +1416,6 @@ def correlated_pairs(
     min_points: int = 2,
     anticorrelated: bool = False,
     validate: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Stream pairs whose Pearson correlation is >= ``threshold``
     (``|corr|`` when ``anticorrelated``) — the CANDIDATE-PRUNED sibling
@@ -1545,9 +1544,7 @@ def correlated_pairs(
         # (two's-complement wraparound on bit 63 included); SQL + chains
         # parse left-associative exactly like the old Python sum() fold
         fp_cols.append(" + ".join(terms) + f" AS __fp{f_idx}")
-    sigs = materialize(
-        sketch.selectExpr("__k", *fp_cols), checkpoint_dir=checkpoint_dir
-    )
+    sigs = materialize(sketch.selectExpr("__k", *fp_cols))
 
     cand = None
     for f_idx in range(n_bits // 64):
@@ -1556,7 +1553,6 @@ def correlated_pairs(
             id_col="__k",
             fp_col=f"__fp{f_idx}",
             band_bits=band_bits,
-            checkpoint_dir=checkpoint_dir,
             # sigs is already materialized above — re-banding off the
             # checkpoint is cheaper than one more eager barrier per
             # fingerprint block (r16)
@@ -1582,7 +1578,6 @@ def correlated_pairs(
         cand.dropDuplicates(["id_a", "id_b"]).select(
             F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b")
         ),
-        checkpoint_dir=checkpoint_dir,
     )
 
     a = obs.select(

@@ -57,7 +57,6 @@ def curate(
     minhash_threshold: float = 0.8,
     seed: int = 42,
     audit: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run the curation recipe over ``df``; every stage is optional.
 
@@ -186,7 +185,7 @@ def curate(
         # label join, and each would otherwise replay the scan,
         # boilerplate shuffles, scoring regexes and contamination join
         # from scratch
-        cur = materialize(cur, checkpoint_dir=checkpoint_dir)
+        cur = materialize(cur)
         survivors = cur.filter(F.col("__reason").isNull())
         pairs = minhash_dedup(
             survivors,
@@ -194,15 +193,14 @@ def curate(
             text_col=text_col,
             threshold=minhash_threshold,
             seed=seed,
-            checkpoint_dir=checkpoint_dir,
         )
         # every non-representative cluster member is a survivor (pairs
         # come from survivors, ids are unique), so ONE left join of the
         # drop set labels them — no anti-join of survivors first
-        drop = connected_components(
-            pairs, checkpoint_dir=checkpoint_dir
-        ).filter(F.col("id") != F.col("cluster_id")).select(
-            F.col("id").alias(id_col), F.lit(True).alias("__near_dup")
+        drop = (
+            connected_components(pairs)
+            .filter(F.col("id") != F.col("cluster_id"))
+            .select(F.col("id").alias(id_col), F.lit(True).alias("__near_dup"))
         )
         cur = cur.join(drop, id_col, "left").withColumn(
             "__reason",

@@ -148,8 +148,8 @@ class TimeseriesLake:
            PyArrow read side). A scheme the driver-side PyArrow scanner
            cannot read (``hdfs://``, ``abfss://``, ``gs://``) raises
            up-front rather than spilling and then crashing the read.
-        2. The session's checkpoint directory
-           (``sc.setCheckpointDir(...)``) — by Spark's own contract a
+        2. The session's checkpoint directory (the SparkContext's
+           ``getCheckpointDir()``) — by Spark's own contract a
            location every node can reach — but ONLY when its scheme is
            PyArrow-readable; an hdfs:// checkpoint dir (the normal
            cluster case) falls through to the rungs below instead of

@@ -168,44 +168,12 @@ def parquet_bloom_columns(spark: SparkSession, file_path: str) -> dict:
         reader.close()
 
 
-def _dynamic_overwrite_lake(
-    df: DataFrame,
-    destination: str,
-    *,
-    partition_uuid: bool = False,
-    checkpoint_dir: str | None = None,
-    bloom_cols: tuple = (),
-    bloom_ndv: int | None = None,
-) -> None:
-    """Rewrite only the collections present in ``df``, with the lake's
-    clustering/sort discipline — CRASH-ATOMICALLY since round 13.
-
-    Through round 12 this published via Spark's dynamic partition
-    overwrite, whose job commit (delete old files, move staged files in)
-    is not atomic on a plain file lake — a crash inside the window could
-    lose a collection's committed history with no replay path. The seam
-    now delegates to :mod:`~mortar_parquet_support_spark.sources.publish`
-    (write-audit-publish: stage under ``.maint/``, audit per-collection
-    counts, journal, rename-swap with backup; crash anywhere converges
-    via ``recover_lake``, which also runs automatically first). The name
-    is kept because the PARTITION semantics are unchanged: only the
-    collections present in ``df`` are replaced."""
-    from mortar_parquet_support_spark.sources.publish import publish_rewrite
-
-    publish_rewrite(
-        df, destination, partition_uuid=partition_uuid,
-        checkpoint_dir=checkpoint_dir,
-        bloom_cols=bloom_cols, bloom_ndv=bloom_ndv,
-    )
-
-
 def compact_collections(
     spark: SparkSession,
     lake_root: str,
     *,
     collections: list[str] | None = None,
     target_rows_per_file: int | None = None,
-    checkpoint_dir: str | None = None,
     bloom_cols: tuple = (),
     bloom_ndv: int | None = None,
     stale_after_secs: float | None = None,
@@ -214,8 +182,8 @@ def compact_collections(
 
     ``target_rows_per_file`` caps file size via ``maxRecordsPerFile`` for
     the rewrite; by default the range repartition alone decides (one file
-    per shuffle partition per collection). Pass ``checkpoint_dir`` on a
-    real cluster: it upgrades the pre-overwrite barrier to a reliable
+    per shuffle partition per collection). On a real cluster set a session
+    checkpoint dir: it upgrades the pre-overwrite barrier to a reliable
     checkpoint on shared storage, so a lost executor mid-overwrite can't
     force a lineage recompute that re-reads the lake path being rewritten
     (localCheckpoint blocks die with their executor).
@@ -240,6 +208,7 @@ def compact_collections(
     # txn backup) would bake the missing partition into the rewrite.
     from mortar_parquet_support_spark.sources.publish import (
         maintenance_lock,
+        publish_rewrite,
         recover_lake,
     )
 
@@ -255,9 +224,8 @@ def compact_collections(
                 "spark.sql.files.maxRecordsPerFile", str(target_rows_per_file)
             )
         try:
-            _dynamic_overwrite_lake(
+            publish_rewrite(
                 df, lake_root, partition_uuid=layout_uuid,
-                checkpoint_dir=checkpoint_dir,
                 bloom_cols=bloom_cols, bloom_ndv=bloom_ndv,
             )
         finally:
@@ -313,7 +281,7 @@ def compact_if_fragmented(
     bound, and running this after every N batches (or from a cron) keeps
     scan cost flat. ``compact_kwargs`` forwards to
     :func:`compact_collections` (``target_rows_per_file``,
-    ``checkpoint_dir``, ``bloom_cols``/``bloom_ndv`` — remember the bloom
+    ``bloom_cols``/``bloom_ndv`` — remember the bloom
     passthrough if ingest writes blooms)."""
     # recover BEFORE the listing probe, not just before the rewrite: a
     # collection parked in a crashed transaction's backup dir is invisible
@@ -342,7 +310,6 @@ def upsert_lake(
     updates: DataFrame,
     *,
     keys: tuple[str, ...] = ("collection", "uuid", "time"),
-    checkpoint_dir: str | None = None,
     bloom_cols: tuple = (),
     bloom_ndv: int | None = None,
     stale_after_secs: float | None = None,
@@ -366,6 +333,7 @@ def upsert_lake(
     from mortar_parquet_support_spark.functions import materialize
     from mortar_parquet_support_spark.sources.publish import (
         maintenance_lock,
+        publish_rewrite,
         recover_lake,
     )
 
@@ -379,9 +347,7 @@ def upsert_lake(
         # source could otherwise surface a collection in the second execution
         # that the first missed — whose existing rows would then be dropped by
         # the publish (its journal supersedes the touched partitions' files).
-        updates = materialize(
-            updates.select(*LAKE_COLUMNS), checkpoint_dir=checkpoint_dir
-        )
+        updates = materialize(updates.select(*LAKE_COLUMNS))
         touched = [
             r.collection
             for r in updates.select("collection").distinct().collect()
@@ -422,10 +388,9 @@ def upsert_lake(
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__v")
         )
-        _dynamic_overwrite_lake(
+        publish_rewrite(
             latest, lake_root,
             partition_uuid=_lake_is_uuid_partitioned(spark, lake_root),
-            checkpoint_dir=checkpoint_dir,
             bloom_cols=bloom_cols, bloom_ndv=bloom_ndv,
         )
 

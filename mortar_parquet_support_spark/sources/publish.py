@@ -842,7 +842,6 @@ def publish_rewrite(
     lake_root: str,
     *,
     partition_uuid: bool = False,
-    checkpoint_dir: str | None = None,
     bloom_cols: tuple = (),
     bloom_ndv: int | None = None,
     stale_after_secs: float | None = None,
@@ -854,11 +853,11 @@ def publish_rewrite(
     discipline; partitions absent from ``df`` keep their files'
     exact identities.
 
-    ``df`` is materialized first for the same reason the old dynamic
-    overwrite did it: both maintenance ops read the very partitions they
-    replace, and the barrier severs that read-path dependency before any
-    file moves — plus the audit and the stage write must see the SAME
-    rows, which a nondeterministic lazy plan would not guarantee.
+    ``df`` is materialized first: both maintenance ops read the very
+    partitions they replace, and the barrier severs that read-path
+    dependency before any file moves — plus the audit and the stage write
+    must see the SAME rows, which a nondeterministic lazy plan would not
+    guarantee.
     """
     from mortar_parquet_support_spark.sources.ingest import (
         _validate_bloom_options,
@@ -878,8 +877,7 @@ def publish_rewrite(
     # compact/upsert, which read the lake earlier — just nest)
     with maintenance_lock(spark, lake_root, stale_after_secs=stale_after_secs):
         _publish_under_lock(
-            df, lake_root, partition_uuid=partition_uuid,
-            checkpoint_dir=checkpoint_dir, bloom_cols=bloom_cols,
+            df, lake_root, partition_uuid=partition_uuid, bloom_cols=bloom_cols,
             bloom_ndv=bloom_ndv, _fail_point=_fail_point,
         )
 
@@ -889,7 +887,6 @@ def _publish_under_lock(
     lake_root: str,
     *,
     partition_uuid: bool,
-    checkpoint_dir: str | None,
     bloom_cols: tuple,
     bloom_ndv: int | None,
     _fail_point: str | None,
@@ -909,7 +906,7 @@ def _publish_under_lock(
     # lake to BUILD the rewrite should recover before reading, as
     # compact_collections/upsert_lake do — a frame built on a
     # half-converged lake is already the wrong rewrite.)
-    df = materialize(df, checkpoint_dir=checkpoint_dir)
+    df = materialize(df)
     expected = _audit_by_collection(df)
 
     # converge any crashed predecessor: its backup/stage dirs must not

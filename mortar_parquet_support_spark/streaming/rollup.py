@@ -116,9 +116,9 @@ def _run_to_memory(stream_df, *, output_mode: str) -> DataFrame:
         q.awaitTermination()
         # localCheckpoint EXPLICITLY, not materialize(): these results are
         # small bounded frames, and materialize upgrades to a RELIABLE
-        # checkpoint whenever any earlier call set a session checkpoint
-        # dir — reliable checkpoint files are never cleaned by the
-        # ContextCleaner (cleanCheckpoints defaults false), so repeated
+        # checkpoint whenever the session has a checkpoint dir — reliable
+        # checkpoint files are never cleaned by the ContextCleaner
+        # (cleanCheckpoints defaults false), so repeated
         # *_once calls would grow that dir without bound, the very
         # session-lifetime leak this function exists to prevent
         # (review r14)

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -40,6 +41,21 @@ def jobs_during(spark, action) -> int:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def session_checkpoint_dir(spark, path):
+    """Put the session on the reliable checkpoint tier under ``path`` for
+    the block, then restore the previous session dir, clearing it when
+    there was none. (Spark's setter appends a fresh UUID subdirectory, so
+    a restored dir is a new subdirectory of the previous one.)"""
+    sc = spark.sparkContext
+    old = sc.getCheckpointDir()
+    sc.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        sc.setCheckpointDir(old)
 
 
 def scan_meta(plan: str, key: str) -> str | None:

@@ -1,9 +1,11 @@
 """The curate near-dup path (pipelines/curation.py -> operators/dedup.py
 minhash_dedup / jaccard_pairs / connected_components /
 resolve_duplicates): component labels against a pure-Python union-find
-oracle, a job budget, equality of outputs with broadcast joins switched
-off, and equality of the reliable-checkpoint tier with the
-localCheckpoint tier."""
+oracle, a job budget, and equality of outputs with broadcast joins
+switched off. Also the barrier tier (functions.materialize): curate,
+bpe_train, semantic_dedup and connected_components give equal outputs
+on the localCheckpoint tier and on a reliable session checkpoint dir,
+and the reliable tier is always eager."""
 
 from __future__ import annotations
 
@@ -11,14 +13,19 @@ import random
 
 import pytest
 
+from mortar_parquet_support_spark.functions import materialize
+from mortar_parquet_support_spark.operators.bpe import bpe_train
 from mortar_parquet_support_spark.operators.dedup import (
     connected_components,
     jaccard_pairs,
     minhash_dedup,
     resolve_duplicates,
+    semantic_dedup,
 )
 from mortar_parquet_support_spark.pipelines import curate
-from tests.conftest import jobs_during
+from tests.conftest import jobs_during, session_checkpoint_dir
+from tests.test_bpe import CORPUS, _ref_train
+from tests.test_operators import _planted_clusters
 
 
 def _union_find_components(pairs):
@@ -122,26 +129,15 @@ def frames(spark):
     )
 
 
-def _curate_reasons(docs, evals, **kw):
+def _curate_reasons(docs, evals):
     audited = curate(
         docs, keep_languages=("en",), eval_df=evals, dedup="minhash",
-        audit=True, **kw,
+        audit=True,
     )
     return {r.doc_id: r.drop_reason for r in audited.collect()}
 
 
-@pytest.fixture
-def local_checkpoint_tier(spark):
-    """Run on the localCheckpoint tier, whatever checkpoint dir an earlier
-    test left on the shared session; restore it afterwards."""
-    jsc = spark.sparkContext._jsc.sc()
-    old = spark.sparkContext.getCheckpointDir()
-    jsc.setCheckpointDir(None)
-    yield
-    jsc.setCheckpointDir(old)
-
-
-def test_curate_minhash_job_budget(spark, frames, local_checkpoint_tier):
+def test_curate_minhash_job_budget(spark, frames):
     """Job budget of the near-dup path: one labelled-frame barrier in
     curate, no count-then-broadcast guard, and a component search that
     converges in one round on this corpus, labelled by one left join
@@ -206,11 +202,72 @@ def test_outputs_do_not_depend_on_broadcast_joins(spark, frames, request):
     assert got[0] == expected
 
 
-def test_curate_reliable_checkpoint_tier_matches_local(
-    spark, frames, local_checkpoint_tier, tmp_path
-):
+# Tier cases: (output on the current tier, expected output or None).
+def _curate_case(spark, frames):
     docs, evals, expected = frames
-    local = _curate_reasons(docs, evals)
-    reliable = _curate_reasons(docs, evals, checkpoint_dir=str(tmp_path / "ckpt"))
-    assert reliable == local == expected
-    assert list((tmp_path / "ckpt").rglob("rdd-*")), "no reliable checkpoint written"
+    return _curate_reasons(docs, evals), expected
+
+
+def _bpe_case(spark, frames):
+    corpus = spark.createDataFrame([(t,) for t in CORPUS], "text string")
+    return bpe_train(corpus, num_merges=12, min_freq=2), _ref_train(CORPUS, 12)
+
+
+def _semantic_case(spark, frames):
+    pairs = semantic_dedup(
+        _planted_clusters(spark), id_col="vec_id", vec_col="embedding",
+        threshold=0.99, n_clusters=4, iters=2,
+    )
+    return {(r.id_a, r.id_b, r.cosine) for r in pairs.collect()}, None
+
+
+def _components_case(spark, frames):
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over dog {i % 2}") for i in range(6)],
+        ["doc_id", "text"],
+    )
+    pairs = minhash_dedup(docs, id_col="doc_id", text_col="text", threshold=0.9)
+    comps = {(r.id, r.cluster_id) for r in connected_components(pairs).collect()}
+    return comps, {(0, 0), (2, 0), (4, 0), (1, 1), (3, 1), (5, 1)}
+
+
+TIER_CASES = {
+    "curate_minhash": _curate_case,
+    "bpe_train": _bpe_case,
+    "semantic_dedup": _semantic_case,
+    "connected_components": _components_case,
+}
+
+
+@pytest.mark.parametrize("case", sorted(TIER_CASES))
+def test_outputs_equal_on_both_checkpoint_tiers(spark, frames, tmp_path, case):
+    """The barrier tier is session state and no operator changes it: the
+    localCheckpoint tier and a reliable session dir give equal outputs,
+    and the reliable run writes checkpoint files under that dir."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    local, want = TIER_CASES[case](spark, frames)
+    assert sc.getCheckpointDir() is None
+    ckpt = tmp_path / "ckpt"
+    with session_checkpoint_dir(spark, ckpt):
+        session_dir = sc.getCheckpointDir()
+        reliable, _ = TIER_CASES[case](spark, frames)
+        assert sc.getCheckpointDir() == session_dir
+    assert sc.getCheckpointDir() is None
+    assert reliable == local
+    assert local
+    if want is not None:
+        assert local == want
+    assert list(ckpt.rglob("rdd-*")), "no reliable checkpoint written"
+
+
+def test_reliable_tier_is_eager(spark, tmp_path):
+    """With a session dir, materialize(eager=False) has written its
+    checkpoint before any action runs on the returned frame: a lazy
+    reliable checkpoint would be written by a second job that re-runs
+    the lineage."""
+    ckpt = tmp_path / "ckpt"
+    with session_checkpoint_dir(spark, ckpt):
+        out = materialize(spark.range(10), eager=False)
+        assert list(ckpt.rglob("rdd-*")), "reliable checkpoint deferred"
+        assert out.count() == 10

@@ -867,34 +867,6 @@ def test_minhash_short_documents_not_dropped(spark):
     assert (1, 5) not in pairs and (2, 5) not in pairs
 
 
-def test_reliable_checkpoint_branch(spark, tmp_path):
-    """checkpoint_dir upgrades the materialization barriers to reliable
-    checkpoint() files on shared storage (cluster mode of functions.materialize)."""
-    import os
-
-    from mortar_parquet_support_spark.operators.dedup import (
-        connected_components,
-        minhash_dedup,
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    docs = spark.createDataFrame(
-        [(i, f"the quick brown fox jumps over dog {i % 2}") for i in range(6)],
-        ["doc_id", "text"],
-    )
-    pairs = minhash_dedup(
-        docs, id_col="doc_id", text_col="text", threshold=0.9, checkpoint_dir=ckpt
-    )
-    comps = {
-        (r.id, r.cluster_id)
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert comps == {(0, 0), (2, 0), (4, 0), (1, 1), (3, 1), (5, 1)}
-    # the reliable branch actually wrote checkpoint files
-    found = [f for _, _, fs in os.walk(ckpt) for f in fs]
-    assert found, "no reliable checkpoint files written"
-
-
 def test_png_codec_roundtrip_all_filters():
     """Pure-stdlib PNG codec: encode with each predictor filter, decode must
     invert it exactly (forward and inverse are independent code paths)."""

@@ -603,7 +603,7 @@ def test_maintenance_lock_is_reentrant_per_thread(spark, tmp_path):
 
 
 def test_compact_goes_through_atomic_publish(spark, lake, tmp_path):
-    """The maintenance seam (_dynamic_overwrite_lake) now rides the
+    """Compaction publishes through publish_rewrite, so it rides the
     protocol: a compaction crash at the commit point leaves the lake
     whole, and the NEXT compaction self-heals and completes."""
     import mortar_parquet_support_spark.sources.publish as pub

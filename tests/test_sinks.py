@@ -5,6 +5,7 @@ import os
 from pyspark.sql import functions as F
 
 from mortar_parquet_support_spark.sources import sinks
+from tests.conftest import session_checkpoint_dir
 
 
 def _frame(spark, n=100):
@@ -96,10 +97,7 @@ def test_to_batches_uses_checkpoint_dir(spark, tmp_path):
     Spark's own contract) is used — not a driver-local tempdir."""
     lake = _lake(spark, tmp_path)
     ckpt = tmp_path / "ckpt"
-    sc = spark.sparkContext
-    old = lake._checkpoint_dir()
-    sc.setCheckpointDir(str(ckpt))
-    try:
+    with session_checkpoint_dir(spark, ckpt):
         gen = lake.to_batches(max_rows=256)
         first = next(gen)
         assert first.num_rows <= 256
@@ -109,10 +107,6 @@ def test_to_batches_uses_checkpoint_dir(spark, tmp_path):
         total = first.num_rows + sum(b.num_rows for b in gen)
         assert total == 1000
         assert not list(ckpt.rglob("lake_batches_*"))
-    finally:
-        # restore — including CLEARING when there was no prior dir, so later
-        # tests on the shared session don't spill into this test's tmpdir
-        sc._jsc.sc().setCheckpointDir(old)
 
 
 def test_to_batches_file_scheme_checkpoint_dir(spark, tmp_path):
@@ -123,9 +117,7 @@ def test_to_batches_file_scheme_checkpoint_dir(spark, tmp_path):
     or ``s3a://`` checkpoint dir takes on a cluster — no monkeypatching)."""
     lake = _lake(spark, tmp_path)
     ckpt = tmp_path / "ckpt_uri"
-    old = lake._checkpoint_dir()
-    spark.sparkContext.setCheckpointDir("file://" + str(ckpt))
-    try:
+    with session_checkpoint_dir(spark, "file://" + str(ckpt)):
         batches = list(lake.to_batches(max_rows=256))
         assert sum(b.num_rows for b in batches) == 1000
         got = sorted(
@@ -136,8 +128,6 @@ def test_to_batches_file_scheme_checkpoint_dir(spark, tmp_path):
         assert got == [float(i) for i in range(1000)]
         # Hadoop-FS delete ran: no spill dirs left behind
         assert not list(ckpt.rglob("lake_batches_*"))
-    finally:
-        spark.sparkContext._jsc.sc().setCheckpointDir(old)
 
 
 def test_rows_to_batch_utc_instants_on_nonutc_driver():

@@ -68,8 +68,7 @@ def main() -> int:
 
     t_sig = best_of(lambda: noop(minhash_signatures(docs, **kw)))
     t_banded_total = best_of(lambda: _banded_frame(
-        docs, num_perm=64, bands=16, shingle_words=3, seed=42,
-        checkpoint_dir=None, **kw,
+        docs, num_perm=64, bands=16, shingle_words=3, seed=42, **kw,
     ))
     t_lsh_total = best_of(lambda: noop(minhash_lsh_candidates(docs, **kw)))
     cands = materialize(minhash_lsh_candidates(docs, **kw))
